@@ -3,10 +3,14 @@
 Reference semantics being reproduced (SURVEY.md §2.1):
 - S1/S2  multi-topic Kafka consumption with per-topic routing
          (ETLTask.java:236,261-274)        → one streaming source, one
-         filtered+decoded branch per topic
+         filtered branch per topic
 - S3     per-topic binary-Avro decode (AbstractAvroDeserializeService.java:46-60)
          → JVM ``from_avro`` when spark-avro is on the classpath, else the
-         pure-Python codec through Arrow-batched ``mapInPandas``
+         pure-Python codec through Arrow-batched ``mapInPandas``. Like the
+         reference, each message is decoded once, on its way to the writer:
+         inside the ``foreachBatch`` writer for ``layout='reference'``
+         (after a raw-row emptiness test), in the streaming plan for
+         ``layout='hive'``
 - K1/K2  Snappy Parquet sink in date-formatted directories
          ``<out>/<topic>/<yyyy-MM-dd/HH/mm>/...`` (ETLTask.java:197,213-219)
 - K3     processing-time rolling interval DAY/HOUR/MINUTE × N
@@ -33,9 +37,11 @@ anywhere in this pipeline — decode and write are narrow.
 from __future__ import annotations
 
 import enum
+import weakref
 from typing import Iterable, Iterator
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -88,14 +94,29 @@ def _fully_nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _jvm_from_avro_available(df: DataFrame, value_col: str, avsc: str) -> bool:
-    try:
-        from pyspark.sql.avro.functions import from_avro
+# SparkContext → whether spark-avro is loadable; the classpath is fixed for
+# the life of a context, so the check runs once per context
+_SPARK_AVRO_LOADABLE: "weakref.WeakKeyDictionary[SparkContext, bool]" = (
+    weakref.WeakKeyDictionary()
+)
 
-        _ = df.select(from_avro(F.col(value_col), avsc).alias("__probe")).schema
-        return True
-    except Exception:
-        return False
+
+def _spark_avro_on_classpath(sc: SparkContext) -> bool:
+    # the class JVM from_avro instantiates; without it analysis fails with
+    # AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE
+    return sc._jvm.org.apache.spark.util.Utils.classIsLoadable(
+        "org.apache.spark.sql.avro.AvroDataToCatalyst"
+    )
+
+
+def _jvm_from_avro_available(df: DataFrame, value_col: str, avsc: str) -> bool:
+    """Whether JVM ``from_avro`` can decode ``df``: one classpath check per
+    SparkContext, cached, so building a decode per micro-batch costs no
+    plan-time probe. ``value_col``/``avsc`` do not change the answer."""
+    sc = df.sparkSession.sparkContext
+    if sc not in _SPARK_AVRO_LOADABLE:
+        _SPARK_AVRO_LOADABLE[sc] = _spark_avro_on_classpath(sc)
+    return _SPARK_AVRO_LOADABLE[sc]
 
 
 def decode_avro(
@@ -247,9 +268,6 @@ def encode_avro(df: DataFrame, avsc: str, value_col: str = "value") -> DataFrame
 # Partition-path derivation (K2)
 # ---------------------------------------------------------------------------
 
-_JAVA_TO_SPARK_FMT = {}  # SimpleDateFormat and Spark patterns agree for y/M/d/H/m
-
-
 def partition_columns(
     date_format: str = "yyyy-MM-dd/HH/mm", event_time_col: str | Column | None = None
 ) -> list[tuple[str, Column]]:
@@ -299,6 +317,10 @@ def ingest(
 ) -> list[StreamingQuery]:
     """Start one streaming query per topic: filter → Avro-decode →
     date-partitioned Snappy Parquet under ``<output_path>/<topic>/...``.
+    Each message is decoded once: for ``"reference"`` the query carries the
+    topic's raw ``(topic, value)`` rows and the ``foreachBatch`` writer
+    tests them for emptiness and decodes only a non-empty batch; for
+    ``"hive"`` the decode is part of the streaming plan.
 
     ``source_df`` must expose Kafka-source-shaped columns ``topic`` (string)
     and ``value`` (binary) — in production from
@@ -340,15 +362,12 @@ def ingest(
         avsc = registry.avsc(topic)
         reader = reader_registry.avsc(topic) if reader_registry else None
         branch = source_df.filter(F.col("topic") == topic)
-        decoded = decode_avro(
-            branch, avsc, value_col="value", mode=mode, reader_avsc=reader
-        )
         sink_path = f"{output_path}/{topic}"
         ckpt = f"{checkpoint_path}/{topic}"
 
         if layout == "hive":
             part_cols = partition_columns(date_format, event_time_col)
-            out = decoded
+            out = decode_avro(branch, avsc, value_col="value", mode=mode, reader_avsc=reader)
             for name, col in part_cols:
                 out = out.withColumn(name, col)
             q = (
@@ -363,8 +382,10 @@ def ingest(
             )
         else:
             q = (
-                decoded.writeStream.foreachBatch(
-                    _reference_layout_writer(sink_path, date_format, idempotent)
+                branch.writeStream.foreachBatch(
+                    _reference_layout_writer(
+                        sink_path, date_format, avsc, mode, reader, idempotent
+                    )
                 )
                 .option("checkpointLocation", ckpt)
                 .trigger(processingTime=trigger)
@@ -375,12 +396,25 @@ def ingest(
     return queries
 
 
-def _reference_layout_writer(sink_path: str, date_format: str, idempotent: bool = False):
+def _reference_layout_writer(
+    sink_path: str,
+    date_format: str,
+    avsc: str,
+    mode: str = "FAILFAST",
+    reader_avsc: str | None = None,
+    idempotent: bool = False,
+):
     """foreachBatch sink reproducing ``<out>/<topic>/<SimpleDateFormat(now)>/``.
+
+    Takes the topic's RAW ``(topic, value)`` rows. Emptiness is tested on
+    those rows (a JVM-only ``limit 1``) and empty batches write nothing (K4
+    lazy-open); only a non-empty batch is Avro-decoded, with
+    :func:`decode_avro` under ``avsc``/``mode``/``reader_avsc``, once, as
+    part of its write.
 
     The date string is evaluated once per micro-batch on the driver — the
     exact analogue of the reference freezing it at writer-open time
-    (ETLTask.java:164-167). Empty batches write nothing (K4 lazy-open).
+    (ETLTask.java:164-167).
 
     Delivery semantics (C1/C2):
     - ``idempotent=False`` (byte-exact reference layout): **at-least-once
@@ -410,9 +444,10 @@ def _reference_layout_writer(sink_path: str, date_format: str, idempotent: bool 
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        decoded = decode_avro(batch_df, avsc, mode=mode, reader_avsc=reader_avsc)
         if not idempotent:
             date_str = _dt.datetime.now(_dt.timezone.utc).strftime(strf)
-            batch_df.write.mode("append").option("compression", "snappy").parquet(
+            decoded.write.mode("append").option("compression", "snappy").parquet(
                 f"{sink_path}/{date_str}"
             )
             return
@@ -439,7 +474,7 @@ def _reference_layout_writer(sink_path: str, date_format: str, idempotent: bool 
             date_str = _dt.datetime.now(_dt.timezone.utc).strftime(strf)
             marker = HPath(f"{sink_path}/_batch_index/{prefix}{date_str.replace('/', '~')}")
             fs.create(marker, True).close()
-        batch_df.write.mode("overwrite").option("compression", "snappy").parquet(
+        decoded.write.mode("overwrite").option("compression", "snappy").parquet(
             f"{sink_path}/{date_str}/bid={batch_id}"
         )
 

@@ -211,7 +211,6 @@ PAGE_VIEW_AVSC = """{
     {"name": "viewTs", "type": ["null", "long"]}]}"""
 
 
-@pytest.mark.slow
 def test_multi_topic_per_schema_demux(spark, tmp_path):
     """S2 parity: one mixed stream, two topics, two DIFFERENT Avro schemas —
     each topic lands under its own directory with its own columns
@@ -241,6 +240,7 @@ def test_multi_topic_per_schema_demux(spark, tmp_path):
         str(tmp_path / "out"),
         topics=[ITEM_VIEW_EVENT_TOPIC, "page-view"],
         checkpoint_path=str(tmp_path / "ckpt"),
+        trigger="1 second",
     )
     try:
         for q in queries:
@@ -260,7 +260,6 @@ def test_multi_topic_per_schema_demux(spark, tmp_path):
     assert sorted(r.url for r in pv.collect()) == [f"/p/{i}" for i in range(4)]
 
 
-@pytest.mark.slow
 def test_checkpoint_restart_no_duplicates(spark, tmp_path):
     """C1/C2 parity, upgraded: restart from the checkpoint reprocesses
     NOTHING (exactly-once), where the reference re-consumes the last
@@ -285,6 +284,7 @@ def test_checkpoint_restart_no_duplicates(spark, tmp_path):
             out,
             topics=[ITEM_VIEW_EVENT_TOPIC],
             checkpoint_path=ckpt,
+            trigger="1 second",
         )
         try:
             for q in qs:
@@ -393,7 +393,9 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
     from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
 
     sink = str(tmp_path / "sink")
-    writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", idempotent=True)
+    writer = _reference_layout_writer(
+        sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC, idempotent=True
+    )
     batch = _encoded_events_df(spark, 5)
 
     writer(batch, 0)
@@ -410,6 +412,14 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
 
     back = spark.read.option("recursiveFileLookup", "true").parquet(sink)
     assert back.count() == 5  # exactly once, not 10, and no stray partials
+    # the writer decoded the raw (topic, value) rows on their way out
+    assert "value" not in back.columns
+    assert sorted(r.itemId for r in back.select("itemId").collect()) == [
+        e["itemId"] for e in item_view_events(5)
+    ]
+    assert {r.uid for r in back.select("baseProperties.uid").collect()} == {
+        e["baseProperties"]["uid"] for e in item_view_events(5)
+    }
     assert not glob.glob(f"{sink}/**/part-leftover*", recursive=True)
     # marker pinned one date dir: replay reused it (no second date dir)
     import os
@@ -421,7 +431,76 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
     assert len(date_dirs) == 1
 
 
-@pytest.mark.slow
+@pytest.mark.parametrize("idempotent", [False, True])
+def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch, idempotent):
+    """K4: a micro-batch with no rows for the topic opens no directory and
+    never builds the decode — emptiness is tested on the raw rows."""
+    import os
+    import sys
+
+    ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
+    calls = []
+    monkeypatch.setattr(ing, "decode_avro", lambda *a, **k: calls.append(a))
+    sink = str(tmp_path / "sink")
+    writer = ing._reference_layout_writer(
+        sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC, idempotent=idempotent
+    )
+    raw = _encoded_events_df(spark, 3).filter(F.col("topic") == "other-topic")
+
+    writer(raw, 0)
+    assert not calls
+    assert not os.path.exists(sink)
+
+
+def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
+    """The writer decodes under the query's mode: FAILFAST fails the batch
+    (the reference's crash, AbstractAvroDeserializeService.java:56-59),
+    PERMISSIVE lands the corrupt payload as an all-null row."""
+    from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
+
+    raw = spark.createDataFrame(
+        [
+            Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(b"\x07broken")),
+            *_encoded_events_df(spark, 2).collect(),
+        ],
+        ENVELOPE,
+    )
+    fmt = "yyyy-MM-dd/HH/mm"
+    with pytest.raises(Exception):
+        _reference_layout_writer(str(tmp_path / "ff"), fmt, ITEM_VIEW_EVENT_AVSC)(raw, 0)
+
+    sink = str(tmp_path / "perm")
+    _reference_layout_writer(sink, fmt, ITEM_VIEW_EVENT_AVSC, mode="PERMISSIVE")(raw, 0)
+    back = spark.read.option("recursiveFileLookup", "true").parquet(sink)
+    rows = back.collect()
+    assert len(rows) == 3
+    nulls = [r for r in rows if r.itemId is None]
+    assert len(nulls) == 1 and all(v is None for v in nulls[0])
+    assert sorted(r.itemId for r in rows if r.itemId) == ["any-item-id0", "any-item-id1"]
+
+
+def test_from_avro_probe_runs_once_per_session(spark, monkeypatch):
+    """The spark-avro classpath check runs once per SparkContext, not on
+    every decode_avro build (one build per micro-batch in the reference
+    layout)."""
+    import sys
+    import weakref
+
+    ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
+    probes = []
+
+    def probe(sc):
+        probes.append(sc)
+        return False
+
+    monkeypatch.setattr(ing, "_SPARK_AVRO_LOADABLE", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(ing, "_spark_avro_on_classpath", probe)
+    df = _encoded_events_df(spark, 2)
+    decode_avro(df, ITEM_VIEW_EVENT_AVSC)
+    decode_avro(df, ITEM_VIEW_EVENT_AVSC, mode="PERMISSIVE")
+    assert probes == [spark.sparkContext]
+
+
 def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
     """End-to-end idempotent reference layout across a stop/restart."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
@@ -442,6 +521,7 @@ def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
             topics=[ITEM_VIEW_EVENT_TOPIC],
             checkpoint_path=ckpt,
             idempotent=True,
+            trigger="1 second",
         )
         try:
             for q in qs:
