@@ -5,9 +5,14 @@ Confluent magic byte — a bare ``binaryDecoder`` over the whole message,
 AbstractAvroDeserializeService.java:46-60 in the reference). Spark's own
 ``from_avro`` lives in the external ``spark-avro`` jar, which is not part of
 a stock PySpark install; this module provides the same semantics with zero
-JVM dependencies. ``spark_integration.decode_avro`` (streaming/ingest.py)
-prefers the JVM path when the jar is present and falls back to this codec
-via an Arrow-batched ``mapInPandas`` otherwise.
+JVM dependencies. ``decode_avro`` (streaming/ingest.py) prefers the JVM
+path when the jar is present and falls back to this codec via an
+Arrow-batched ``mapInPandas`` otherwise.
+
+Decoding has one entry point, :func:`decode_record`: one decoder per
+(writer, reader) schema pair, built once into a tree of per-node closures
+(as ``GenericDatumReader`` builds one resolver per pair); the plain decode
+is the reader == writer case.
 
 Supported: the full Avro 1.x type lattice the reference's registry can feed
 it — null, boolean, int, long, float, double, bytes, string, record (incl.
@@ -33,11 +38,14 @@ shapes Spark itself cannot type (recursive records).
 
 from __future__ import annotations
 
+import copy
 import datetime as dt
 import decimal
+import functools
 import io
 import json
 import struct
+import threading
 from typing import Any
 
 from pyspark.sql import types as T
@@ -280,10 +288,24 @@ def from_spark_struct(st: T.StructType, name: str = "Record", namespace: str = "
 
 # ---------------------------------------------------------------------------
 # Binary decode (Avro spec: zigzag varints, length-prefixed, block arrays)
+# with schema resolution (spec §"Schema Resolution"), the rolling-upgrade
+# contract the reference lacks (it pins one schema per topic,
+# AbstractAvroDeserializeService.java:28-34): record fields match by name
+# (writer order drives the byte stream), writer-only fields are decoded and
+# dropped, reader-only fields take their defaults, the promotion lattice
+# applies (int→long/float/double, long→float/double, float→double,
+# string⇄bytes), a writer union branch resolves against the reader union
+# (an exact type match first, then the first promotable branch), and an
+# enum symbol missing from the reader falls back to the reader's
+# ``default`` (Avro 1.9+). All of it is decided when the decoder is built;
+# a pair that cannot be resolved builds a node that raises only when a
+# payload reaches it.
 # ---------------------------------------------------------------------------
 
 
-class _Reader:
+class Reader:
+    """Byte cursor over one Avro binary buffer (also reads OCF framing)."""
+
     __slots__ = ("buf", "pos")
 
     def __init__(self, buf: bytes):
@@ -317,23 +339,6 @@ class _Reader:
         return out
 
 
-def _from_logical(node: dict, v: Any) -> Any:
-    """Base-decoded value → Python value for a logical-typed primitive.
-    Timestamps come back tz-naive in UTC (the session tz this repo pins)."""
-    lt = node["logicalType"]
-    if lt == "date":
-        return _EPOCH_DATE + dt.timedelta(days=v)
-    if lt in ("timestamp-millis", "local-timestamp-millis"):
-        return _EPOCH_DT + dt.timedelta(milliseconds=v)
-    if lt in ("timestamp-micros", "local-timestamp-micros"):
-        return _EPOCH_DT + dt.timedelta(microseconds=v)
-    if lt == "decimal":  # bytes: two's-complement big-endian unscaled
-        return decimal.Decimal(int.from_bytes(v, "big", signed=True)).scaleb(
-            -node["scale"]
-        )
-    return v
-
-
 def _to_base(node: dict, v: Any) -> Any:
     """Python value → base-typed value for encoding a logical primitive.
     Accepts either the logical Python type or an already-base value."""
@@ -355,161 +360,98 @@ def _to_base(node: dict, v: Any) -> Any:
     return v
 
 
-def _decode(schema: Any, r: _Reader) -> Any:
-    if isinstance(schema, str):
-        if schema == "null":
-            return None
-        if schema == "boolean":
-            v = r.buf[r.pos] != 0
-            r.pos += 1
-            return v
-        if schema in ("int", "long"):
-            return r.read_long()
-        if schema == "float":
-            (v,) = struct.unpack_from("<f", r.buf, r.pos)
-            r.pos += 4
-            return v
-        if schema == "double":
-            (v,) = struct.unpack_from("<d", r.buf, r.pos)
-            r.pos += 8
-            return v
-        if schema == "bytes":
-            return r.read_bytes()
-        if schema == "string":
-            return r.read_bytes().decode("utf-8")
-        raise ValueError(f"unknown primitive {schema!r}")
-    if isinstance(schema, list):  # union: varint branch index, then value
-        idx = r.read_long()
-        branch = schema[idx]
-        if branch == "null":
-            return None
-        if len(schema) <= 2:  # ["null", X] / [X] — the hot path (every
-            return _decode(branch, r)  # nullable field) stays allocation-free
-        non_null = [b for b in schema if b != "null"]
-        if len(non_null) == 1:
-            return _decode(branch, r)
-        names = {_type_name(b) for b in non_null}
-        if names == {"int", "long"} or names == {"float", "double"}:
-            return _decode(branch, r)  # widened scalar (spark-avro semantics)
-        mi = non_null.index(branch)
-        v = _decode(branch, r)
-        return {f"member{i}": (v if i == mi else None) for i in range(len(non_null))}
-    t = schema["type"]
-    if t == "record":
-        return {f["name"]: _decode(f["type"], r) for f in schema["fields"]}
-    if t == "enum":
-        return schema["symbols"][r.read_long()]
-    if t == "fixed":
-        raw = r.read_fixed(schema["size"])
-        if schema.get("logicalType") == "decimal":
-            return decimal.Decimal(int.from_bytes(raw, "big", signed=True)).scaleb(
-                -schema["scale"]
-            )
-        return raw
-    if t in _PRIMITIVES:  # logical-typed primitive node
-        return _from_logical(schema, _decode(t, r))
-    if t == "array":
-        out = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                out.append(_decode(schema["items"], r))
-        return out
-    if t == "map":
-        out = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                k = r.read_bytes().decode("utf-8")
-                out[k] = _decode(schema["values"], r)
-        return out
-    raise ValueError(f"unsupported Avro type: {t!r}")
-
-
-def decode_record(schema: Any, payload: bytes) -> dict:
-    """Decode one binary-Avro payload (whole message, no magic byte) —
-    the reference's ``deserializeAvro`` semantics."""
-    return _decode(schema, _Reader(payload))
-
-
-# ---------------------------------------------------------------------------
-# Schema resolution (Avro spec §"Schema Resolution"): decode a payload
-# written with WRITER schema W under READER schema R — the rolling-upgrade
-# contract. The reference pins one schema per topic forever
-# (AbstractAvroDeserializeService.java:28-34) and crashes on any change;
-# this implements the spec rules: match record fields by name (writer
-# order drives the byte stream), skip writer-only fields, fill
-# reader-only fields from their defaults, apply the promotion lattice
-# (int→long/float/double, long→float/double, float→double,
-# string⇄bytes), resolve union branches writer-side then match the
-# reader union, and accept enum symbols present in the reader (falling
-# back to the reader's enum ``default`` per Avro 1.9+).
-# ---------------------------------------------------------------------------
-
-_PROMOTABLE = {
-    "int": {"int", "long", "float", "double"},
-    "long": {"long", "float", "double"},
-    "float": {"float", "double"},
-    "double": {"double"},
-    "string": {"string", "bytes"},
-    "bytes": {"bytes", "string"},
-    "boolean": {"boolean"},
-    "null": {"null"},
-}
-
-
-def _promote(v: Any, w_t: str, r_t: str) -> Any:
-    if w_t == r_t or v is None:
-        return v
-    if r_t in ("float", "double"):
-        return float(v)
-    if r_t == "long":
-        return int(v)
-    if r_t == "bytes":
-        return v.encode("utf-8") if isinstance(v, str) else v
-    if r_t == "string":
-        return v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else v
+def _read_boolean(r: Reader) -> bool:
+    v = r.buf[r.pos] != 0
+    r.pos += 1
     return v
 
 
+def _read_ieee(fmt: str):
+    """Reader of one little-endian IEEE float or double."""
+    s = struct.Struct(fmt)
+    unpack_from, size = s.unpack_from, s.size
+
+    def read(r: Reader) -> float:
+        (v,) = unpack_from(r.buf, r.pos)
+        r.pos += size
+        return v
+
+    return read
+
+
+def _read_string(r: Reader) -> str:
+    return r.read_bytes().decode("utf-8")
+
+
+_READ_PRIMITIVE = {
+    "null": lambda r: None,
+    "boolean": _read_boolean,
+    "int": Reader.read_long,
+    "long": Reader.read_long,
+    "float": _read_ieee("<f"),
+    "double": _read_ieee("<d"),
+    "bytes": Reader.read_bytes,
+    "string": _read_string,
+}
+
+# the promotion lattice: (writer type, reader type) → value conversion
+_PROMOTE = {
+    ("int", "long"): int,
+    ("int", "float"): float,
+    ("int", "double"): float,
+    ("long", "float"): float,
+    ("long", "double"): float,
+    ("float", "double"): float,
+    ("string", "bytes"): lambda v: v.encode("utf-8"),
+    ("bytes", "string"): lambda v: v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else v,
+}
+
+
+def _logical(node: Any):
+    """Base value → Python value for a logical-typed node, or None when the
+    node has no logical type. Timestamps come back tz-naive in UTC (the
+    session tz this repo pins)."""
+    lt = node.get("logicalType") if isinstance(node, dict) else None
+    if lt == "date":
+        return lambda v: _EPOCH_DATE + dt.timedelta(days=v)
+    if lt in ("timestamp-millis", "local-timestamp-millis"):
+        return lambda v: _EPOCH_DT + dt.timedelta(milliseconds=v)
+    if lt in ("timestamp-micros", "local-timestamp-micros"):
+        return lambda v: _EPOCH_DT + dt.timedelta(microseconds=v)
+    if lt == "decimal":  # two's-complement big-endian unscaled (bytes/fixed)
+        scale = -node["scale"]
+        return lambda v: decimal.Decimal(int.from_bytes(v, "big", signed=True)).scaleb(scale)
+    return None
+
+
 def _match(w: Any, rd: Any) -> bool:
-    """Can a writer-branch value resolve against reader node ``rd``?"""
+    """Does writer node ``w`` resolve to reader node ``rd``: the same type
+    (and name, for a named type) or a promotion?"""
     wt, rt = _type_name(w), _type_name(rd)
-    if wt in _PROMOTABLE:
-        return rt in _PROMOTABLE[wt]
+    if wt in _PRIMITIVES:
+        return wt == rt or (wt, rt) in _PROMOTE
     if wt in ("record", "enum", "fixed"):
-        return rt == wt and (
-            not (isinstance(w, dict) and isinstance(rd, dict))
-            or w.get("name") == rd.get("name")
-        )
-    return wt == rt  # array/map/union by shape
+        return rt == wt and w["name"] == rd["name"]
+    return wt == rt  # array/map by shape
+
+
+def _members(union: list) -> list | None:
+    """The member-struct field names of a multi-branch union, or None when
+    the union lands as a nullable or widened scalar (to_spark_type)."""
+    non_null = [b for b in union if b != "null"]
+    names = {_type_name(b) for b in non_null}
+    if len(non_null) < 2 or names in ({"int", "long"}, {"float", "double"}):
+        return None
+    return [f"member{i}" for i in range(len(non_null))]
 
 
 def _default_value(rd: Any, d: Any) -> Any:
     """A reader field's JSON default → the decoded-value representation."""
-    if isinstance(rd, list):  # union default applies to the FIRST branch
-        return _default_value(rd[0], d)
-    if isinstance(rd, str):
-        if rd == "null":
-            return None
-        if rd in ("float", "double"):
-            return float(d)
-        if rd in ("int", "long"):
-            return int(d)
-        if rd == "bytes":
-            return d.encode("latin-1") if isinstance(d, str) else d
-        return d
-    t = rd["type"]
+    t = _type_name(rd)
+    if t == "union":  # a union default applies to the FIRST branch
+        v = _default_value(rd[0], d)
+        names = _members(rd)
+        return v if names is None or rd[0] == "null" else dict.fromkeys(names) | {"member0": v}
     if t == "record":
         return {
             f["name"]: _default_value(
@@ -521,115 +463,172 @@ def _default_value(rd: Any, d: Any) -> Any:
         return [_default_value(rd["items"], x) for x in (d or [])]
     if t == "map":
         return {k: _default_value(rd["values"], x) for k, x in (d or {}).items()}
-    if t == "fixed":
-        return d.encode("latin-1") if isinstance(d, str) else d
-    if t in _PRIMITIVES:  # logical-typed primitive: defaults are base-typed
-        return _from_logical(rd, _default_value(t, d))
-    return d  # enum: the symbol string
+    if t in ("int", "long"):
+        d = int(d)
+    elif t in ("float", "double"):
+        d = float(d)
+    elif t in ("bytes", "fixed") and isinstance(d, str):
+        d = d.encode("latin-1")  # JSON carries bytes as ISO-8859-1 text
+    conv = _logical(rd)  # a logical type's default is base-typed
+    return d if conv is None else conv(d)
 
 
-def _decode_resolved(w: Any, rd: Any, r: _Reader) -> Any:
-    # unions first: the writer union picks the branch from the byte
-    # stream; the branch then resolves against the reader node
-    if isinstance(w, list):
-        branch = w[r.read_long()]
-        return _resolve_value(branch, rd, r)
-    return _resolve_value(w, rd, r)
+def _blocks(item):
+    """Decoder of an Avro array (a map is an array of key/value pairs)."""
 
-
-def _resolve_value(w: Any, rd: Any, r: _Reader) -> Any:
-    if isinstance(rd, list):  # reader union: first matching branch wins
-        for b in rd:
-            if _match(w, b):
-                return _resolve_value(w, b, r)
-        raise ValueError(
-            f"schema resolution: writer {_type_name(w)!r} matches no reader "
-            f"union branch {[_type_name(b) for b in rd]!r}"
-        )
-    wt, rt = _type_name(w), _type_name(rd)
-    if wt in _PROMOTABLE:
-        if rt not in _PROMOTABLE[wt]:
-            raise ValueError(f"schema resolution: cannot promote {wt!r} to {rt!r}")
-        v = _decode(w, r)
-        base = _promote(v, wt, rt)
-        # the reader's logical annotation applies only when the writer had
-        # none — a logical writer node already converted inside _decode,
-        # and converting twice would corrupt the value
-        if isinstance(rd, dict) and not isinstance(w, dict):
-            return _from_logical(rd, base)
-        return base
-    if wt == "record":
-        if rt != "record" or w.get("name") != rd.get("name"):
-            raise ValueError(
-                f"schema resolution: record {w.get('name')!r} vs reader {rt!r}"
-            )
-        r_fields = {f["name"]: f for f in rd["fields"]}
-        out: dict = {}
-        for f in w["fields"]:
-            if f["name"] in r_fields:
-                out[f["name"]] = _decode_resolved(
-                    f["type"], r_fields[f["name"]]["type"], r
-                )
-            else:
-                _decode(f["type"], r)  # writer-only: decode and discard
-        for f in rd["fields"]:
-            if f["name"] not in out:
-                if "default" not in f and not (
-                    isinstance(f["type"], list) and f["type"][0] == "null"
-                ):
-                    raise ValueError(
-                        f"schema resolution: reader field {f['name']!r} absent "
-                        "from writer and has no default"
-                    )
-                out[f["name"]] = _default_value(f["type"], f.get("default"))
+    def dec_blocks(r: Reader) -> list:
+        out = []
+        n = r.read_long()
+        while n:
+            if n < 0:  # block with byte-size prefix
+                n = -n
+                r.read_long()
+            for _ in range(n):
+                out.append(item(r))
+            n = r.read_long()
         return out
+
+    return dec_blocks
+
+
+def _fail(msg: str):
+    def fail(r: Reader):
+        raise ValueError(f"schema resolution: {msg}")
+
+    return fail
+
+
+def _then(f, conv):
+    return lambda r: conv(f(r))
+
+
+def _build(w: Any, rd: Any, built: dict):
+    """The closure decoding one value written as ``w`` into reader node
+    ``rd``. ``built`` maps (writer, reader) record pairs to their closures,
+    so a recursive record refers back to the one under construction."""
+    # a union branch or enum symbol index comes from the bytes: keyed by
+    # index, so a corrupt negative one fails instead of wrapping round
+    if isinstance(w, list):
+        branches = {i: _build(b, rd, built) for i, b in enumerate(w)}
+        return lambda r: branches[r.read_long()](r)
+    if isinstance(rd, list):
+        return _build_reader_union(w, rd, built)
+    wt, rt = _type_name(w), _type_name(rd)
+    if not _match(w, rd):
+        return _fail(f"{wt!r} does not match or promote to {rt!r}")
+    if wt in _PRIMITIVES:  # possibly logical-typed
+        f = _READ_PRIMITIVE[wt]
+        # the reader's logical annotation applies only when the writer had
+        # none; converting a writer-logical value twice would corrupt it
+        for conv in (
+            _logical(w),
+            _PROMOTE.get((wt, rt)),
+            None if isinstance(w, dict) else _logical(rd),
+        ):
+            if conv is not None:
+                f = _then(f, conv)
+        return f
+    if wt == "record":
+        return _build_record(w, rd, built)
     if wt == "enum":
-        sym = w["symbols"][r.read_long()]
-        if sym in rd["symbols"]:
-            return sym
-        if "default" in rd:
-            return rd["default"]
-        raise ValueError(f"schema resolution: enum symbol {sym!r} not in reader")
-    if wt == "array":
-        if rt != "array":
-            raise ValueError("schema resolution: array vs non-array reader")
-        out_l: list = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                out_l.append(_decode_resolved(w["items"], rd["items"], r))
-        return out_l
-    if wt == "map":
-        if rt != "map":
-            raise ValueError("schema resolution: map vs non-map reader")
-        out_m: dict = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                k = r.read_bytes().decode("utf-8")
-                out_m[k] = _decode_resolved(w["values"], rd["values"], r)
-        return out_m
+        table = {}
+        for i, sym in enumerate(w["symbols"]):
+            v = sym if sym in rd["symbols"] else rd.get("default")
+            table[i] = _fail(f"enum symbol {sym!r} not in reader") if v is None else lambda r, v=v: v
+        return lambda r: table[r.read_long()](r)
     if wt == "fixed":
-        if rt != "fixed" or w["size"] != rd["size"]:
-            raise ValueError("schema resolution: fixed name/size mismatch")
-        return _decode(rd, r)  # reader's logical annotation applies
-    raise ValueError(f"schema resolution: unsupported writer type {wt!r}")
+        if w["size"] != rd["size"]:
+            return _fail("fixed size mismatch")
+        f = functools.partial(Reader.read_fixed, n=w["size"])
+        conv = _logical(rd)  # the reader's decimal annotation applies
+        return f if conv is None else _then(f, conv)
+    if wt == "array":
+        return _blocks(_build(w["items"], rd["items"], built))
+    if wt == "map":
+        values = _build(w["values"], rd["values"], built)
+        return _then(_blocks(lambda r: (_read_string(r), values(r))), dict)
+    return _fail(f"unsupported writer type {wt!r}")
 
 
-def decode_record_resolved(writer: Any, reader: Any, payload: bytes) -> dict:
-    """Decode one binary payload written with ``writer`` under ``reader``
-    (both parse_schema trees) per Avro schema resolution."""
-    return _decode_resolved(writer, reader, _Reader(payload))
+def _build_record(w: dict, rd: Any, built: dict):
+    key = (id(w), id(rd))
+    if key in built:
+        return built[key]
+    r_types = {f["name"]: f["type"] for f in rd["fields"]}
+    w_names = {f["name"] for f in w["fields"]}
+    added = [f for f in rd["fields"] if f["name"] not in w_names]
+    for f in added:
+        if "default" not in f and not (isinstance(f["type"], list) and f["type"][0] == "null"):
+            return _fail(f"reader field {f['name']!r} absent from writer and has no default")
+    defaults = {f["name"]: _default_value(f["type"], f.get("default")) for f in added}
+    dropped = tuple(f["name"] for f in w["fields"] if f["name"] not in r_types)
+    steps: list = []
+
+    def dec_record(r: Reader) -> dict:
+        out = {name: f(r) for name, f in steps}
+        for name in dropped:  # writer-only: decoded to advance, then dropped
+            del out[name]
+        if defaults:
+            out.update(copy.deepcopy(defaults))
+        return out
+
+    built[key] = dec_record
+    steps.extend(
+        (f["name"], _build(f["type"], r_types.get(f["name"], f["type"]), built))
+        for f in w["fields"]
+    )
+    return dec_record
+
+
+def _build_reader_union(w: Any, rd: list, built: dict):
+    """A non-union writer node into a reader union: the first branch of the
+    same type (and name) wins, else the first branch it promotes to."""
+    exact = (i for i, b in enumerate(rd) if _type_name(b) == _type_name(w) and _match(w, b))
+    k = next(exact, None)
+    if k is None:
+        k = next((i for i, b in enumerate(rd) if _match(w, b)), None)
+    if k is None:
+        return _fail(
+            f"writer {_type_name(w)!r} matches no reader union branch "
+            f"{[_type_name(b) for b in rd]!r}"
+        )
+    f = _build(w, rd[k], built)
+    names = _members(rd)
+    if names is None or rd[k] == "null":
+        return f
+    member = names[sum(b != "null" for b in rd[:k])]  # spark-avro's member struct
+
+    def dec_member(r: Reader) -> dict:
+        out = dict.fromkeys(names)
+        out[member] = f(r)
+        return out
+
+    return dec_member
+
+
+# (id(writer), id(reader)) → (decoder, writer, reader); holding the trees
+# keeps their ids from being reused while the entry lives
+_DECODERS: dict = {}
+_DECODERS_MAX = 64
+_DECODERS_LOCK = threading.Lock()
+
+
+def decode_record(writer: Any, payload: bytes, reader: Any = None) -> Any:
+    """Decode one binary-Avro payload (whole message, no magic byte — the
+    reference's ``deserializeAvro`` semantics) written with ``writer``.
+    With ``reader``, the value is resolved into the reader schema per Avro
+    schema resolution; without, ``writer`` is also the reader. Both are
+    parse_schema trees, treated as immutable: the decoder for each pair
+    is built on first use and memoised by object identity (bounded)."""
+    key = (id(writer), id(reader))
+    entry = _DECODERS.get(key)
+    if entry is None:
+        entry = (_build(writer, writer if reader is None else reader, {}), writer, reader)
+        with _DECODERS_LOCK:
+            if len(_DECODERS) >= _DECODERS_MAX:
+                del _DECODERS[next(iter(_DECODERS))]  # the oldest pair
+            _DECODERS[key] = entry
+    return entry[0](Reader(payload))
 
 
 # ---------------------------------------------------------------------------

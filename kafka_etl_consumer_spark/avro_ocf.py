@@ -31,10 +31,11 @@ from typing import Any, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_etl_consumer_spark.avro_codec import (
-    _decode,
-    _Reader,
+    Reader,
     _Writer,
     _encode,
+    decode_record,
+    encode_record,
     parse_schema,
     to_spark_struct,
 )
@@ -44,7 +45,7 @@ _MAGIC = b"Obj\x01"
 
 def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
     """Parse one OCF byte blob → (schema_tree, records)."""
-    r = _Reader(data)
+    r = Reader(data)
     if r.read_fixed(4) != _MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
     meta: dict[str, bytes] = {}
@@ -62,6 +63,9 @@ def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported OCF codec {codec!r} (null|deflate)")
     schema = parse_schema(meta["avro.schema"].decode("utf-8"))
+    # a block's `count` records are the body of an Avro array of `count`
+    # items: each block decodes as one array value, by one decoder per file
+    block_schema = {"type": "array", "items": schema}
     sync = r.read_fixed(16)
     records: list[dict] = []
     while r.pos < len(data):
@@ -70,9 +74,9 @@ def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
         block = r.read_fixed(size)
         if codec == "deflate":
             block = zlib.decompress(block, -15)  # raw deflate per spec
-        br = _Reader(block)
-        for _ in range(count):
-            records.append(_decode(schema, br))
+        records.extend(
+            decode_record(block_schema, encode_record("long", count) + block + b"\x00")
+        )
         if r.read_fixed(16) != sync:
             raise ValueError("OCF sync marker mismatch (corrupt block)")
     return schema, records

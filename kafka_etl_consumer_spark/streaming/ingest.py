@@ -50,7 +50,6 @@ from pyspark.storagelevel import StorageLevel
 
 from kafka_etl_consumer_spark.avro_codec import (
     decode_record,
-    decode_record_resolved,
     encode_record,
     parse_schema,
     to_spark_struct,
@@ -109,11 +108,11 @@ def _spark_avro_on_classpath(sc: SparkContext) -> bool:
     )
 
 
-def _jvm_from_avro_available(df: DataFrame, value_col: str, avsc: str) -> bool:
-    """Whether JVM ``from_avro`` can decode ``df``: one classpath check per
-    SparkContext, cached, so building a decode per micro-batch costs no
-    plan-time probe. ``value_col``/``avsc`` do not change the answer."""
-    sc = df.sparkSession.sparkContext
+def _jvm_from_avro_available(spark: SparkSession) -> bool:
+    """Whether JVM ``from_avro`` is usable in ``spark``: one classpath check
+    per SparkContext, cached, so building a decode per micro-batch costs no
+    plan-time probe."""
+    sc = spark.sparkContext
     if sc not in _SPARK_AVRO_LOADABLE:
         _SPARK_AVRO_LOADABLE[sc] = _spark_avro_on_classpath(sc)
     return _SPARK_AVRO_LOADABLE[sc]
@@ -149,19 +148,21 @@ def decode_avro(
     AbstractAvroDeserializeService.java:28-34 of the reference — a schema
     change breaks it). Payloads decode with the WRITER schema ``avsc``
     under the reader schema at the CODEC level
-    (avro_codec.decode_record_resolved): reader-added fields take their
+    (``avro_codec.decode_record(writer, payload, reader)``, one decoder
+    per schema pair): reader-added fields take their
     declared ``default`` (null-union fields default to null), writer-only
     fields are decoded and discarded, the promotion lattice applies
     (int→long/float/double, long→float/double, float→double,
-    string⇄bytes), union branches re-match against the reader union, and
-    enum symbols fall back to the reader's enum ``default``. Output
+    string⇄bytes), union branches re-match against the reader union
+    (a multi-branch reader union lands as its member struct), and enum
+    symbols fall back to the reader's enum ``default``. Output
     columns and types come from the reader schema. Always the Python
     decoder path — JVM ``from_avro`` takes one schema with no
     reader/writer split.
 
     Prefers the JVM ``from_avro`` (whole-stage codegen, zero Python) when
     spark-avro is loaded; otherwise decodes with the pure-Python codec in
-    Arrow-batched ``mapInPandas`` — still partition-parallel, ~100k msg/s/core.
+    Arrow-batched ``mapInPandas``, still partition-parallel.
     ``corrupt_col`` always uses the Python decoder: JVM PERMISSIVE
     ``from_avro`` yields an all-null-FIELDS row for a corrupt payload, never
     a null struct, so there is no JVM-side signal to capture the raw bytes
@@ -178,7 +179,7 @@ def decode_avro(
     if (
         corrupt_col is None
         and reader_avsc is None
-        and _jvm_from_avro_available(df, value_col, avsc)
+        and _jvm_from_avro_available(df.sparkSession)
     ):
         from pyspark.sql.avro.functions import from_avro
 
@@ -186,17 +187,8 @@ def decode_avro(
         base = df.select(*keep, rec.alias("__r"))
         return base.select(*keep, "__r.*")
 
-    schema_tree = parse_schema(avsc)
-    if reader_avsc is not None:
-        reader_tree = parse_schema(reader_avsc)
-
-        def _dec(payload: bytes) -> dict:
-            return decode_record_resolved(schema_tree, reader_tree, payload)
-    else:
-
-        def _dec(payload: bytes) -> dict:
-            return decode_record(schema_tree, payload)
-
+    writer_tree = parse_schema(avsc)
+    reader_tree = None if reader_avsc is None else parse_schema(reader_avsc)
     field_names = [f.name for f in struct_schema.fields]
     permissive = mode.upper() == "PERMISSIVE"
     if permissive:
@@ -216,7 +208,7 @@ def decode_avro(
             records, bad = [], []
             for payload in pdf[value_col]:
                 try:
-                    records.append(_dec(bytes(payload)))
+                    records.append(decode_record(writer_tree, bytes(payload), reader_tree))
                     bad.append(None)
                 except Exception:
                     if not permissive:
@@ -412,9 +404,10 @@ def _reference_layout_writer(
     :func:`decode_avro` under ``avsc``/``mode``/``reader_avsc``, once, as
     part of its write.
 
-    The date string is evaluated once per micro-batch on the driver — the
-    exact analogue of the reference freezing it at writer-open time
-    (ETLTask.java:164-167).
+    The date string is formatted once per micro-batch on the driver by
+    the reference's own formatter, ``java.text.SimpleDateFormat`` (in
+    UTC), through the session's JVM — the exact analogue of the reference
+    freezing it at writer-open time (ETLTask.java:164-167).
 
     Delivery semantics (C1/C2):
     - ``idempotent=False`` (byte-exact reference layout): **at-least-once
@@ -432,13 +425,11 @@ def _reference_layout_writer(
       directory level (readers use recursiveFileLookup or partition-style
       globs, as they already must for ``<date>/<HH>/<mm>``).
     """
-    import datetime as _dt
-
-    # SimpleDateFormat → strftime for the y/M/d/H/m subset the reference uses
-    strf = (
-        date_format.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
-        .replace("HH", "%H").replace("mm", "%M")
-    )
+    def format_now(spark: SparkSession) -> str:
+        jvm = spark._jvm
+        fmt = jvm.java.text.SimpleDateFormat(date_format)
+        fmt.setTimeZone(jvm.java.util.TimeZone.getTimeZone("UTC"))
+        return fmt.format(jvm.java.util.Date())
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -446,7 +437,7 @@ def _reference_layout_writer(
         spark = batch_df.sparkSession
         decoded = decode_avro(batch_df, avsc, mode=mode, reader_avsc=reader_avsc)
         if not idempotent:
-            date_str = _dt.datetime.now(_dt.timezone.utc).strftime(strf)
+            date_str = format_now(spark)
             decoded.write.mode("append").option("compression", "snappy").parquet(
                 f"{sink_path}/{date_str}"
             )
@@ -471,7 +462,7 @@ def _reference_layout_writer(
         if existing:
             date_str = existing[0][len(prefix):].replace("~", "/")
         else:
-            date_str = _dt.datetime.now(_dt.timezone.utc).strftime(strf)
+            date_str = format_now(spark)
             marker = HPath(f"{sink_path}/_batch_index/{prefix}{date_str.replace('/', '~')}")
             fs.create(marker, True).close()
         decoded.write.mode("overwrite").option("compression", "snappy").parquet(

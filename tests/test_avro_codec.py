@@ -227,7 +227,7 @@ def test_schema_resolution_promotions_unions_enums_skip():
     (primitive, record, array), union branch re-matching, and enum
     fallback to the reader's default symbol."""
     from kafka_etl_consumer_spark.avro_codec import (
-        decode_record_resolved,
+        decode_record,
         encode_record,
         parse_schema,
     )
@@ -266,7 +266,7 @@ def test_schema_resolution_promotions_unions_enums_skip():
         "nested": {"x": 9, "ys": [1, 2, 3]},   # dropped by the reader
         "maybe": 17,
     })
-    got = decode_record_resolved(writer, reader, payload)
+    got = decode_record(writer, payload, reader)
     assert got == {
         "id": 5,                      # int -> long
         "price": 42.0,                # int -> double via reader union
@@ -288,11 +288,44 @@ def test_schema_resolution_promotions_unions_enums_skip():
         {"name": "id", "type": "long"},
         {"name": "missing", "type": "string"}]}""")
     with _pytest.raises(ValueError, match="no default"):
-        decode_record_resolved(writer, bad_reader, payload)
+        decode_record(writer, payload, bad_reader)
 
     # illegal promotion (string -> int) is an error, not a silent null
     bad_promo = parse_schema("""{
       "type": "record", "name": "Evt", "fields": [
         {"name": "name", "type": "int"}]}""")
     with _pytest.raises(ValueError, match="promote"):
-        decode_record_resolved(writer, bad_promo, payload)
+        decode_record(writer, payload, bad_promo)
+
+
+def test_out_of_range_branch_or_symbol_index_is_corrupt():
+    # a corrupt payload's union branch or enum symbol index, negative or
+    # past the end, fails the decode (FAILFAST raises, PERMISSIVE
+    # dead-letters) instead of wrapping round to the last branch/symbol
+    tree = parse_schema(json.dumps({
+        "type": "record", "name": "R",
+        "fields": [
+            {"name": "a", "type": ["null", "string"]},
+            {"name": "e", "type": {"type": "enum", "name": "E", "symbols": ["X", "Y"]}},
+        ],
+    }))
+    assert decode_record(tree, b"\x02\x04hi\x02") == {"a": "hi", "e": "Y"}
+    for payload in (b"\x01\x04hi\x02", b"\x04\x04hi\x02", b"\x00\x01", b"\x00\x04"):
+        with pytest.raises(LookupError):
+            decode_record(tree, payload)
+
+
+def test_decoder_memoised_per_schema_pair_and_bounded(monkeypatch):
+    from kafka_etl_consumer_spark import avro_codec
+
+    monkeypatch.setattr(avro_codec, "_DECODERS", {})
+    tree = parse_schema(ITEM_VIEW_EVENT_AVSC)
+    row = item_view_events(1)[0]
+    payload = encode_record(tree, row)
+    for _ in range(3):
+        assert decode_record(tree, payload) == row
+    assert decode_record(tree, payload, tree) == row
+    assert len(avro_codec._DECODERS) == 2  # (tree, None) and (tree, tree)
+    for _ in range(avro_codec._DECODERS_MAX + 10):
+        assert decode_record(parse_schema(ITEM_VIEW_EVENT_AVSC), payload) == row
+    assert len(avro_codec._DECODERS) == avro_codec._DECODERS_MAX

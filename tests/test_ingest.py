@@ -479,6 +479,69 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
     assert sorted(r.itemId for r in rows if r.itemId) == ["any-item-id0", "any-item-id1"]
 
 
+@pytest.mark.parametrize("idempotent", [False, True])
+def test_reference_layout_date_format_every_letter(spark, tmp_path, idempotent):
+    """The batch directory is the reference's SimpleDateFormat of the batch
+    time in UTC: every pattern letter is formatted (``ss`` included), none
+    lands as literal text."""
+    import datetime as dt
+    import os
+
+    from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
+
+    sink = str(tmp_path / "sink")
+    before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None, microsecond=0)
+    _reference_layout_writer(
+        sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC, idempotent=idempotent
+    )(_encoded_events_df(spark, 2), 0)
+    after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    dirs = {
+        os.path.relpath(os.path.dirname(f), sink)
+        for f in glob.glob(f"{sink}/**/*.parquet", recursive=True)
+    }
+    assert len(dirs) == 1
+    date_dir = dirs.pop()
+    if idempotent:
+        date_dir, bid = date_dir.rsplit("/", 1)
+        assert bid == "bid=0"
+    assert before <= dt.datetime.strptime(date_dir, "%Y-%m-%d/%H/%M/%S") <= after
+    back = spark.read.parquet(f"{sink}/{date_dir}")
+    assert sorted(r.itemId for r in back.collect()) == ["any-item-id0", "any-item-id1"]
+
+
+def test_decode_avro_reader_equal_to_writer_multibranch_union(spark):
+    """Resolving under a reader schema equal to the writer schema lands
+    exactly the rows of the plain decode, a multi-branch union (member
+    struct) included."""
+    import json
+
+    avsc = json.dumps({
+        "type": "record", "name": "Evt",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "ref", "type": ["null", "int", "string"]},
+        ],
+    })
+    tree = parse_schema(avsc)
+    records = [
+        {"id": 1, "ref": {"member0": 7, "member1": None}},
+        {"id": 2, "ref": {"member0": None, "member1": "inv-9"}},
+        {"id": 3, "ref": None},
+    ]
+    df = spark.createDataFrame(
+        [Row(topic="t", value=bytearray(encode_record(tree, r))) for r in records],
+        ENVELOPE,
+    )
+    plain = decode_avro(df, avsc)
+    resolved = decode_avro(df, avsc, reader_avsc=avsc)
+    assert resolved.schema == plain.schema
+    plain_rows = sorted(plain.collect(), key=lambda r: r.id)
+    assert [(r.id, r.ref and tuple(r.ref)) for r in plain_rows] == [
+        (1, (7, None)), (2, (None, "inv-9")), (3, None),
+    ]
+    assert sorted(resolved.collect(), key=lambda r: r.id) == plain_rows
+
+
 def test_from_avro_probe_runs_once_per_session(spark, monkeypatch):
     """The spark-avro classpath check runs once per SparkContext, not on
     every decode_avro build (one build per micro-batch in the reference
@@ -625,7 +688,7 @@ def test_jvm_python_avro_decode_parity(spark):
 
     df = _encoded_events_df(spark, 6)
     ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
-    if not ing._jvm_from_avro_available(df, "value", ITEM_VIEW_EVENT_AVSC):
+    if not ing._jvm_from_avro_available(spark):
         pytest.skip(
             "spark-avro not loadable → decode_avro takes the pure-Python "
             "mapInPandas branch (tested everywhere else in this file)"
