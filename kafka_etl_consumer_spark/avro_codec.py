@@ -9,10 +9,12 @@ JVM dependencies. ``decode_avro`` (streaming/ingest.py) prefers the JVM
 path when the jar is present and falls back to this codec via an
 Arrow-batched ``mapInPandas`` otherwise.
 
-Decoding has one entry point, :func:`decode_record`: one decoder per
-(writer, reader) schema pair, built once into a tree of per-node closures
-(as ``GenericDatumReader`` builds one resolver per pair); the plain decode
-is the reader == writer case.
+Decoding has one entry point, :func:`decode_record` (:func:`decoder` gives
+the same per-value function over a :class:`Reader`, for framed streams such
+as OCF): one decoder per (writer, reader) schema pair, built once into a
+tree of per-node closures (as ``GenericDatumReader`` builds one resolver per
+pair); the plain decode is the reader == writer case. Encoding
+(:func:`encode_record`) walks the schema tree per value.
 
 Supported: the full Avro 1.x type lattice the reference's registry can feed
 it — null, boolean, int, long, float, double, bytes, string, record (incl.
@@ -34,6 +36,12 @@ fields (one per non-null branch, exactly one set per value). The reference
 would throw on any schema it didn't expect
 (AbstractAvroDeserializeService.java:56-59); we keep fail-fast only for
 shapes Spark itself cannot type (recursive records).
+
+Each Avro rule has one definition, which every reader of it calls:
+named-type fullnames (Avro spec "Names") in :func:`_fullname`; how a union
+lands in Spark in :func:`_union_shape`, used by the Spark translator, the
+decoder, reader defaults and the encoder; each logical type's Spark type
+and conversions both ways in the ``_LOGICAL_TYPES`` table.
 """
 
 from __future__ import annotations
@@ -46,23 +54,71 @@ import io
 import json
 import struct
 import threading
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import types as T
 
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double", "bytes", "string"}
-
-# logical types we materialize (anything else passes through as base type)
-_LOGICALS = {
-    "date",
-    "timestamp-millis",
-    "timestamp-micros",
-    "local-timestamp-millis",
-    "local-timestamp-micros",
-    "decimal",
-}
 _EPOCH_DATE = dt.date(1970, 1, 1)
 _EPOCH_DT = dt.datetime(1970, 1, 1)
+
+
+class _Logical(NamedTuple):
+    """One logical type: its Spark type and its value conversions (the
+    Python value is what decode returns; encode accepts it or the base)."""
+
+    spark: Callable[[dict], T.DataType]  # node → Spark type
+    from_base: Callable[[dict], Callable[[Any], Any]]  # node → (base → Python)
+    to_base: Callable[[dict, Any], Any]  # (node, Python or base value) → base
+
+
+def _instant(unit: dt.timedelta, spark: T.DataType) -> _Logical:
+    """A count of ``unit`` since the epoch. Python values are tz-naive UTC
+    (the session tz this repo pins)."""
+    return _Logical(
+        lambda node: spark,
+        lambda node: lambda v: _EPOCH_DT + unit * v,
+        lambda node, v: (
+            (v.replace(tzinfo=None) - _EPOCH_DT) // unit if isinstance(v, dt.datetime) else int(v)
+        ),
+    )
+
+
+def _decimal_to_base(node: dict, v: Any) -> bytes:
+    """Two's-complement big-endian unscaled bytes, a fixed's own size."""
+    if isinstance(v, (bytes, bytearray)):
+        return v
+    unscaled = int(decimal.Decimal(v).scaleb(node["scale"]).to_integral_value())
+    size = node.get("size") or max(1, (unscaled.bit_length() + 8) // 8)
+    return unscaled.to_bytes(size, "big", signed=True)
+
+
+# the logical types materialized; any other passes through as its base type
+_LOGICAL_TYPES = {
+    "date": _Logical(
+        lambda node: T.DateType(),
+        lambda node: lambda v: _EPOCH_DATE + dt.timedelta(days=v),
+        lambda node, v: (v - _EPOCH_DATE).days if isinstance(v, dt.date) else int(v),
+    ),
+    "timestamp-millis": _instant(dt.timedelta(milliseconds=1), T.TimestampType()),
+    "timestamp-micros": _instant(dt.timedelta(microseconds=1), T.TimestampType()),
+    "local-timestamp-millis": _instant(dt.timedelta(milliseconds=1), T.TimestampNTZType()),
+    "local-timestamp-micros": _instant(dt.timedelta(microseconds=1), T.TimestampNTZType()),
+    "decimal": _Logical(  # on bytes or fixed
+        lambda node: T.DecimalType(node["precision"], node["scale"]),
+        lambda node: lambda v, scale=-node["scale"]: decimal.Decimal(
+            int.from_bytes(v, "big", signed=True)
+        ).scaleb(scale),
+        _decimal_to_base,
+    ),
+}
+
+
+def _from_base(node: Any):
+    """Base value → Python value for a logical-typed node, or None when the
+    node has no logical type."""
+    lt = node.get("logicalType") if isinstance(node, dict) else None
+    return None if lt is None else _LOGICAL_TYPES[lt].from_base(node)
 
 
 # ---------------------------------------------------------------------------
@@ -70,20 +126,39 @@ _EPOCH_DT = dt.datetime(1970, 1, 1)
 # ---------------------------------------------------------------------------
 
 
+def _fullname(name: str, namespace: str | None) -> str:
+    """The Avro spec's Names rule, for a definition and a reference alike:
+    a dotted name is already a fullname; otherwise ``namespace``, if any,
+    qualifies it."""
+    return name if "." in name or not namespace else f"{namespace}.{name}"
+
+
 def parse_schema(avsc: str | dict) -> dict:
     """Parse an .avsc JSON string into a resolved schema tree.
 
     Named types (record/enum/fixed) referenced by name are replaced with
     their definitions so the codec never needs a registry at decode time.
+    A reference is looked up by fullname, then by short name.
     """
     raw = json.loads(avsc) if isinstance(avsc, str) else avsc
     named: dict[str, dict] = {}
+
+    def logical(node: dict, out: dict) -> dict:
+        """``out`` with ``node``'s logical annotation, when the codec
+        materializes it (on fixed, only decimal)."""
+        lt = node.get("logicalType")
+        if lt in _LOGICAL_TYPES and (out["type"] != "fixed" or lt == "decimal"):
+            out["logicalType"] = lt
+            if lt == "decimal":
+                out["precision"] = int(node["precision"])
+                out["scale"] = int(node.get("scale", 0))
+        return out
 
     def resolve(node: Any, namespace: str | None) -> Any:
         if isinstance(node, str):
             if node in _PRIMITIVES:
                 return node
-            full = node if "." in node else (f"{namespace}.{node}" if namespace else node)
+            full = _fullname(node, namespace)
             if full in named:
                 return named[full]
             if node in named:
@@ -94,51 +169,34 @@ def parse_schema(avsc: str | dict) -> dict:
         if not isinstance(node, dict):
             raise ValueError(f"malformed Avro schema node: {node!r}")
         t = node.get("type")
-        if t in ("record", "error"):
-            ns = node.get("namespace", namespace)
-            full = f"{ns}.{node['name']}" if ns else node["name"]
-            out = {"type": "record", "name": full, "fields": []}
-            named[full] = out
-            named.setdefault(node["name"], out)
-            for f in node["fields"]:
-                rf = {"name": f["name"], "type": resolve(f["type"], ns)}
-                if "default" in f:  # kept for reader-side schema resolution
-                    rf["default"] = f["default"]
-                out["fields"].append(rf)
-            return out
-        if t == "enum":
-            ns = node.get("namespace", namespace)
-            full = f"{ns}.{node['name']}" if ns else node["name"]
-            out = {"type": "enum", "name": full, "symbols": list(node["symbols"])}
-            if "default" in node:  # Avro 1.9+ enum fallback symbol
-                out["default"] = node["default"]
-            named[full] = out
-            named.setdefault(node["name"], out)
-            return out
-        if t == "fixed":
-            ns = node.get("namespace", namespace)
-            full = f"{ns}.{node['name']}" if ns else node["name"]
-            out = {"type": "fixed", "name": full, "size": int(node["size"])}
-            if node.get("logicalType") == "decimal":
-                out["logicalType"] = "decimal"
-                out["precision"] = int(node["precision"])
-                out["scale"] = int(node.get("scale", 0))
-            named[full] = out
-            named.setdefault(node["name"], out)
+        if t in ("record", "error", "enum", "fixed"):
+            full = _fullname(node["name"], node.get("namespace", namespace))
+            ns, _, short = full.rpartition(".")  # nested types inherit ns
+            out = {"type": "record" if t == "error" else t, "name": full}
+            named[full] = out  # before the fields: a record may refer to itself
+            named.setdefault(short, out)
+            if t == "enum":
+                out["symbols"] = list(node["symbols"])
+                if "default" in node:  # Avro 1.9+ enum fallback symbol
+                    out["default"] = node["default"]
+            elif t == "fixed":
+                out["size"] = int(node["size"])
+                logical(node, out)
+            else:
+                out["fields"] = []
+                for f in node["fields"]:
+                    rf = {"name": f["name"], "type": resolve(f["type"], ns)}
+                    if "default" in f:  # kept for reader-side schema resolution
+                        rf["default"] = f["default"]
+                    out["fields"].append(rf)
             return out
         if t == "array":
             return {"type": "array", "items": resolve(node["items"], namespace)}
         if t == "map":
             return {"type": "map", "values": resolve(node["values"], namespace)}
         if t in _PRIMITIVES:
-            lt = node.get("logicalType")
-            if lt in _LOGICALS:  # keep the annotation; else → base type
-                out = {"type": t, "logicalType": lt}
-                if lt == "decimal":
-                    out["precision"] = int(node["precision"])
-                    out["scale"] = int(node.get("scale", 0))
-                return out
-            return t
+            out = logical(node, {"type": t})
+            return out if "logicalType" in out else t
         return resolve(t, namespace)
 
     return resolve(raw, None)
@@ -146,6 +204,46 @@ def parse_schema(avsc: str | dict) -> dict:
 
 def _type_name(schema: Any) -> str:
     return schema if isinstance(schema, str) else ("union" if isinstance(schema, list) else schema["type"])
+
+
+def _union_shape(union: list) -> tuple[list[int], str | None]:
+    """How a union lands in Spark, after spark-avro's SchemaConverters:
+    (indices of its non-null branches, shape). The shape is None for one
+    non-null branch (a value of that branch, nullable if "null" is a
+    branch), ``"long"``/``"double"`` for {int, long}/{float, double}
+    (widened to that type), and ``"members"`` otherwise: a struct of
+    nullable ``member0..memberN-1``, one per non-null branch, exactly one
+    set per value (``["null"]`` alone is the empty struct and decodes to
+    None)."""
+    if len(union) == 2 and (union[0] == "null") != (union[1] == "null"):
+        return [int(union[0] == "null")], None  # [null, X] or [X, null], unscanned
+    branches = [i for i, b in enumerate(union) if b != "null"]
+    if len(branches) == 1:
+        return branches, None
+    names = {_type_name(union[i]) for i in branches}
+    if names == {"int", "long"}:
+        return branches, "long"
+    if names == {"float", "double"}:
+        return branches, "double"
+    return branches, "members"
+
+
+def _member_of(union: list, i: int):
+    """The function landing a value of branch ``i`` in ``union``'s member
+    struct, or None when the value lands as it is (a nullable or widened
+    scalar, or the null branch)."""
+    branches, shape = _union_shape(union)
+    if shape != "members" or i not in branches:
+        return None
+    names = [f"member{m}" for m in range(len(branches))]
+    member = names[branches.index(i)]
+
+    def as_member(v: Any) -> dict:
+        out = dict.fromkeys(names)
+        out[member] = v
+        return out
+
+    return as_member
 
 
 # ---------------------------------------------------------------------------
@@ -169,29 +267,25 @@ def to_spark_type(schema: Any, _visiting: frozenset[str] = frozenset()) -> tuple
 
     ``["null", X]`` unions become nullable X — exactly what the JVM
     ``from_avro`` does for the reference's all-nullable-fields schema
-    (FIXTURES.md §A). Multi-branch unions follow spark-avro
-    SchemaConverters: [int,long]→LongType, [float,double]→DoubleType,
-    anything else → struct of nullable member0..memberN-1. Recursive
-    records are legal Avro but have no Spark representation → ValueError
-    (fail fast)."""
+    (FIXTURES.md §A); other unions land as :func:`_union_shape` says.
+    Recursive records are legal Avro but have no Spark representation →
+    ValueError (fail fast)."""
     if isinstance(schema, str):
         return _AVRO_TO_SPARK[schema], schema == "null"
     if isinstance(schema, list):
-        non_null = [b for b in schema if b != "null"]
-        nullable = len(non_null) < len(schema)
-        if len(non_null) == 1:
-            dtype, _ = to_spark_type(non_null[0], _visiting)
-            return dtype, nullable
-        names = {_type_name(b) for b in non_null}
-        if names == {"int", "long"}:
-            return T.LongType(), nullable
-        if names == {"float", "double"}:
-            return T.DoubleType(), nullable
+        branches, shape = _union_shape(schema)
+        nullable = len(branches) < len(schema)
+        if shape is None:
+            return to_spark_type(schema[branches[0]], _visiting)[0], nullable
+        if shape != "members":
+            return _AVRO_TO_SPARK[shape], nullable
         fields = [
-            T.StructField(f"member{i}", to_spark_type(b, _visiting)[0], True)
-            for i, b in enumerate(non_null)
+            T.StructField(f"member{m}", to_spark_type(schema[i], _visiting)[0], True)
+            for m, i in enumerate(branches)
         ]
         return T.StructType(fields), nullable
+    if "logicalType" in schema:
+        return _LOGICAL_TYPES[schema["logicalType"]].spark(schema), False
     t = schema["type"]
     if t == "record":
         if schema["name"] in _visiting:
@@ -207,20 +301,9 @@ def to_spark_type(schema: Any, _visiting: frozenset[str] = frozenset()) -> tuple
     if t == "enum":
         return T.StringType(), False
     if t == "fixed":
-        if schema.get("logicalType") == "decimal":
-            return T.DecimalType(schema["precision"], schema["scale"]), False
         return T.BinaryType(), False
-    if t in _PRIMITIVES:  # logical-typed primitive node
-        lt = schema.get("logicalType")
-        if lt == "date":
-            return T.DateType(), False
-        if lt in ("timestamp-millis", "timestamp-micros"):
-            return T.TimestampType(), False
-        if lt in ("local-timestamp-millis", "local-timestamp-micros"):
-            return T.TimestampNTZType(), False
-        if lt == "decimal":
-            return T.DecimalType(schema["precision"], schema["scale"]), False
-        return _AVRO_TO_SPARK[t], t == "null"
+    if t in _PRIMITIVES:
+        return to_spark_type(t)
     if t == "array":
         dt, nullable = to_spark_type(schema["items"], _visiting)
         return T.ArrayType(dt, containsNull=nullable), False
@@ -304,7 +387,7 @@ def from_spark_struct(st: T.StructType, name: str = "Record", namespace: str = "
 
 
 class Reader:
-    """Byte cursor over one Avro binary buffer (also reads OCF framing)."""
+    """Byte cursor over one Avro binary buffer, read by :func:`decoder`."""
 
     __slots__ = ("buf", "pos")
 
@@ -337,27 +420,6 @@ class Reader:
         out = self.buf[self.pos : self.pos + n]
         self.pos += n
         return out
-
-
-def _to_base(node: dict, v: Any) -> Any:
-    """Python value → base-typed value for encoding a logical primitive.
-    Accepts either the logical Python type or an already-base value."""
-    lt = node["logicalType"]
-    if lt == "date":
-        return (v - _EPOCH_DATE).days if isinstance(v, dt.date) else int(v)
-    if lt in ("timestamp-millis", "local-timestamp-millis"):
-        if isinstance(v, dt.datetime):
-            return (v.replace(tzinfo=None) - _EPOCH_DT) // dt.timedelta(milliseconds=1)
-        return int(v)
-    if lt in ("timestamp-micros", "local-timestamp-micros"):
-        if isinstance(v, dt.datetime):
-            return (v.replace(tzinfo=None) - _EPOCH_DT) // dt.timedelta(microseconds=1)
-        return int(v)
-    if lt == "decimal":
-        unscaled = int(decimal.Decimal(v).scaleb(node["scale"]).to_integral_value())
-        size = node.get("size") or max(1, (unscaled.bit_length() + 8) // 8)
-        return unscaled.to_bytes(size, "big", signed=True)
-    return v
 
 
 def _read_boolean(r: Reader) -> bool:
@@ -407,23 +469,6 @@ _PROMOTE = {
 }
 
 
-def _logical(node: Any):
-    """Base value → Python value for a logical-typed node, or None when the
-    node has no logical type. Timestamps come back tz-naive in UTC (the
-    session tz this repo pins)."""
-    lt = node.get("logicalType") if isinstance(node, dict) else None
-    if lt == "date":
-        return lambda v: _EPOCH_DATE + dt.timedelta(days=v)
-    if lt in ("timestamp-millis", "local-timestamp-millis"):
-        return lambda v: _EPOCH_DT + dt.timedelta(milliseconds=v)
-    if lt in ("timestamp-micros", "local-timestamp-micros"):
-        return lambda v: _EPOCH_DT + dt.timedelta(microseconds=v)
-    if lt == "decimal":  # two's-complement big-endian unscaled (bytes/fixed)
-        scale = -node["scale"]
-        return lambda v: decimal.Decimal(int.from_bytes(v, "big", signed=True)).scaleb(scale)
-    return None
-
-
 def _match(w: Any, rd: Any) -> bool:
     """Does writer node ``w`` resolve to reader node ``rd``: the same type
     (and name, for a named type) or a promotion?"""
@@ -435,23 +480,13 @@ def _match(w: Any, rd: Any) -> bool:
     return wt == rt  # array/map by shape
 
 
-def _members(union: list) -> list | None:
-    """The member-struct field names of a multi-branch union, or None when
-    the union lands as a nullable or widened scalar (to_spark_type)."""
-    non_null = [b for b in union if b != "null"]
-    names = {_type_name(b) for b in non_null}
-    if len(non_null) < 2 or names in ({"int", "long"}, {"float", "double"}):
-        return None
-    return [f"member{i}" for i in range(len(non_null))]
-
-
 def _default_value(rd: Any, d: Any) -> Any:
     """A reader field's JSON default → the decoded-value representation."""
     t = _type_name(rd)
     if t == "union":  # a union default applies to the FIRST branch
         v = _default_value(rd[0], d)
-        names = _members(rd)
-        return v if names is None or rd[0] == "null" else dict.fromkeys(names) | {"member0": v}
+        as_member = _member_of(rd, 0)
+        return v if as_member is None else as_member(v)
     if t == "record":
         return {
             f["name"]: _default_value(
@@ -469,7 +504,7 @@ def _default_value(rd: Any, d: Any) -> Any:
         d = float(d)
     elif t in ("bytes", "fixed") and isinstance(d, str):
         d = d.encode("latin-1")  # JSON carries bytes as ISO-8859-1 text
-    conv = _logical(rd)  # a logical type's default is base-typed
+    conv = _from_base(rd)  # a logical type's default is base-typed
     return d if conv is None else conv(d)
 
 
@@ -521,9 +556,9 @@ def _build(w: Any, rd: Any, built: dict):
         # the reader's logical annotation applies only when the writer had
         # none; converting a writer-logical value twice would corrupt it
         for conv in (
-            _logical(w),
+            _from_base(w),
             _PROMOTE.get((wt, rt)),
-            None if isinstance(w, dict) else _logical(rd),
+            None if isinstance(w, dict) else _from_base(rd),
         ):
             if conv is not None:
                 f = _then(f, conv)
@@ -540,7 +575,7 @@ def _build(w: Any, rd: Any, built: dict):
         if w["size"] != rd["size"]:
             return _fail("fixed size mismatch")
         f = functools.partial(Reader.read_fixed, n=w["size"])
-        conv = _logical(rd)  # the reader's decimal annotation applies
+        conv = _from_base(rd)  # the reader's annotation applies
         return f if conv is None else _then(f, conv)
     if wt == "array":
         return _blocks(_build(w["items"], rd["items"], built))
@@ -593,17 +628,8 @@ def _build_reader_union(w: Any, rd: list, built: dict):
             f"{[_type_name(b) for b in rd]!r}"
         )
     f = _build(w, rd[k], built)
-    names = _members(rd)
-    if names is None or rd[k] == "null":
-        return f
-    member = names[sum(b != "null" for b in rd[:k])]  # spark-avro's member struct
-
-    def dec_member(r: Reader) -> dict:
-        out = dict.fromkeys(names)
-        out[member] = f(r)
-        return out
-
-    return dec_member
+    as_member = _member_of(rd, k)
+    return f if as_member is None else _then(f, as_member)
 
 
 # (id(writer), id(reader)) → (decoder, writer, reader); holding the trees
@@ -613,13 +639,13 @@ _DECODERS_MAX = 64
 _DECODERS_LOCK = threading.Lock()
 
 
-def decode_record(writer: Any, payload: bytes, reader: Any = None) -> Any:
-    """Decode one binary-Avro payload (whole message, no magic byte — the
-    reference's ``deserializeAvro`` semantics) written with ``writer``.
-    With ``reader``, the value is resolved into the reader schema per Avro
-    schema resolution; without, ``writer`` is also the reader. Both are
-    parse_schema trees, treated as immutable: the decoder for each pair
-    is built on first use and memoised by object identity (bounded)."""
+def decoder(writer: Any, reader: Any = None):
+    """The function reading one value written with ``writer`` from a
+    :class:`Reader` and returning it resolved into ``reader`` per Avro
+    schema resolution; without ``reader``, ``writer`` is also the reader.
+    Both are parse_schema trees, treated as immutable: the decoder for
+    each pair is built on first use and memoised by object identity
+    (bounded)."""
     key = (id(writer), id(reader))
     entry = _DECODERS.get(key)
     if entry is None:
@@ -628,7 +654,14 @@ def decode_record(writer: Any, payload: bytes, reader: Any = None) -> Any:
             if len(_DECODERS) >= _DECODERS_MAX:
                 del _DECODERS[next(iter(_DECODERS))]  # the oldest pair
             _DECODERS[key] = entry
-    return entry[0](Reader(payload))
+    return entry[0]
+
+
+def decode_record(writer: Any, payload: bytes, reader: Any = None) -> Any:
+    """Decode one binary-Avro payload (whole message, no magic byte — the
+    reference's ``deserializeAvro`` semantics) written with ``writer``,
+    into ``reader`` if given, by :func:`decoder`."""
+    return decoder(writer, reader)(Reader(payload))
 
 
 # ---------------------------------------------------------------------------
@@ -680,22 +713,14 @@ def _encode(schema: Any, v: Any, w: _Writer) -> None:
         return
     if isinstance(schema, list):
         if v is None and "null" in schema:
-            idx = schema.index("null")
-            w.write_long(idx)
-            return
-        non_null = [(i, b) for i, b in enumerate(schema) if b != "null"]
-        if not non_null:
-            raise ValueError("union has no non-null branch for value")
-        if len(non_null) > 1:
-            names = {_type_name(b) for _, b in non_null}
-            if names == {"int", "long"} or names == {"float", "double"}:
-                # widened scalar: encode into the widest branch
-                wide = "long" if "long" in names else "double"
-                idx, branch = next((i, b) for i, b in non_null if _type_name(b) == wide)
-                w.write_long(idx)
-                _encode(branch, v, w)
-                return
-            if isinstance(v, dict) and any(k.startswith("member") for k in v):
+            i = schema.index("null")
+        else:
+            branches, shape = _union_shape(schema)
+            if shape is None:
+                i = branches[0]
+            elif shape != "members":  # widened scalar: encode into the wider branch
+                i = next(i for i in branches if _type_name(schema[i]) == shape)
+            elif isinstance(v, dict) and any(k.startswith("member") for k in v):
                 set_members = [
                     k for k, mv in v.items() if k.startswith("member") and mv is not None
                 ]
@@ -703,30 +728,28 @@ def _encode(schema: Any, v: Any, w: _Writer) -> None:
                     raise ValueError(
                         f"member-struct union value must set exactly one member, got {set_members}"
                     )
-                mi = int(set_members[0][len("member") :])
-                idx, branch = non_null[mi]
-                w.write_long(idx)
-                _encode(branch, v[set_members[0]], w)
-                return
-            raise ValueError(
-                f"cannot pick a union branch for {type(v).__name__} among {sorted(names)}"
-            )
-        idx, branch = non_null[0]
-        w.write_long(idx)
-        _encode(branch, v, w)
+                i = branches[int(set_members[0][len("member") :])]
+                v = v[set_members[0]]
+            else:
+                raise ValueError(
+                    f"cannot pick a union branch for {type(v).__name__} among "
+                    f"{[_type_name(b) for b in schema]}"
+                )
+        w.write_long(i)
+        _encode(schema[i], v, w)
         return
     t = schema["type"]
-    if t == "record":
+    if "logicalType" in schema:
+        v = _LOGICAL_TYPES[schema["logicalType"]].to_base(schema, v)
+    if t in _PRIMITIVES:
+        _encode(t, v, w)
+    elif t == "record":
         for f in schema["fields"]:
             _encode(f["type"], v[f["name"]], w)
     elif t == "enum":
         w.write_long(schema["symbols"].index(v))
     elif t == "fixed":
-        if schema.get("logicalType") == "decimal" and not isinstance(v, (bytes, bytearray)):
-            v = _to_base(schema, v)
         w.out.write(bytes(v))
-    elif t in _PRIMITIVES:  # logical-typed primitive node
-        _encode(t, _to_base(schema, v), w)
     elif t == "array":
         if v:
             w.write_long(len(v))

@@ -32,53 +32,48 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kafka_etl_consumer_spark.avro_codec import (
     Reader,
-    _Writer,
-    _encode,
-    decode_record,
+    decoder,
     encode_record,
     parse_schema,
     to_spark_struct,
 )
 
 _MAGIC = b"Obj\x01"
+# the spec's header record, and a block: [record count, the records as one
+# Avro bytes value, the file's sync marker]
+_HEADER = parse_schema({
+    "type": "record", "name": "org.apache.avro.file.Header", "fields": [
+        {"name": "magic", "type": {"type": "fixed", "name": "Magic", "size": 4}},
+        {"name": "meta", "type": {"type": "map", "values": "bytes"}},
+        {"name": "sync", "type": {"type": "fixed", "name": "Sync", "size": 16}}]})
+_BLOCK = parse_schema({
+    "type": "record", "name": "org.apache.avro.file.Block", "fields": [
+        {"name": "count", "type": "long"},
+        {"name": "records", "type": "bytes"},
+        {"name": "sync", "type": {"type": "fixed", "name": "Sync", "size": 16}}]})
 
 
 def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
     """Parse one OCF byte blob → (schema_tree, records)."""
-    r = Reader(data)
-    if r.read_fixed(4) != _MAGIC:
+    if data[:4] != _MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
-    meta: dict[str, bytes] = {}
-    while True:
-        n = r.read_long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            r.read_long()  # skip byte-size prefix
-        for _ in range(n):
-            key = r.read_bytes().decode("utf-8")
-            meta[key] = r.read_bytes()
-    codec = meta.get("avro.codec", b"null").decode("utf-8")
+    r = Reader(data)
+    header = decoder(_HEADER)(r)
+    codec = header["meta"].get("avro.codec", b"null").decode("utf-8")
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported OCF codec {codec!r} (null|deflate)")
-    schema = parse_schema(meta["avro.schema"].decode("utf-8"))
-    # a block's `count` records are the body of an Avro array of `count`
-    # items: each block decodes as one array value, by one decoder per file
-    block_schema = {"type": "array", "items": schema}
-    sync = r.read_fixed(16)
+    schema = parse_schema(header["meta"]["avro.schema"].decode("utf-8"))
+    read_block, read_record = decoder(_BLOCK), decoder(schema)
     records: list[dict] = []
     while r.pos < len(data):
-        count = r.read_long()
-        size = r.read_long()
-        block = r.read_fixed(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)  # raw deflate per spec
-        records.extend(
-            decode_record(block_schema, encode_record("long", count) + block + b"\x00")
-        )
-        if r.read_fixed(16) != sync:
+        block = read_block(r)
+        if block["sync"] != header["sync"]:
             raise ValueError("OCF sync marker mismatch (corrupt block)")
+        body = block["records"]
+        if codec == "deflate":
+            body = zlib.decompress(body, -15)  # raw deflate per spec
+        br = Reader(body)
+        records.extend(read_record(br) for _ in range(block["count"]))
     return schema, records
 
 
@@ -93,34 +88,19 @@ def write_ocf(
         raise ValueError(f"unsupported OCF codec {codec!r} (null|deflate)")
     schema = parse_schema(avsc)
     schema_json = json.dumps(avsc) if isinstance(avsc, dict) else avsc
-    out = io.BytesIO()
-    out.write(_MAGIC)
-    meta = _Writer()
-    meta.write_long(2)
-    for k, v in (("avro.schema", schema_json.encode()), ("avro.codec", codec.encode())):
-        meta.write_bytes(k.encode())
-        meta.write_bytes(v)
-    meta.write_long(0)
-    out.write(meta.out.getvalue())
     sync = uuid.uuid4().bytes
-    out.write(sync)
+    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
+    out = io.BytesIO()
+    out.write(encode_record(_HEADER, {"magic": _MAGIC, "meta": meta, "sync": sync}))
 
     def flush(batch: list[dict]) -> None:
         if not batch:
             return
-        w = _Writer()
-        for rec in batch:
-            _encode(schema, rec, w)
-        payload = w.out.getvalue()
+        body = b"".join(encode_record(schema, rec) for rec in batch)
         if codec == "deflate":
             co = zlib.compressobj(wbits=-15)
-            payload = co.compress(payload) + co.flush()
-        head = _Writer()
-        head.write_long(len(batch))
-        head.write_long(len(payload))
-        out.write(head.out.getvalue())
-        out.write(payload)
-        out.write(sync)
+            body = co.compress(body) + co.flush()
+        out.write(encode_record(_BLOCK, {"count": len(batch), "records": body, "sync": sync}))
 
     batch: list[dict] = []
     for rec in records:
@@ -169,12 +149,9 @@ def write_avro_py(
     for HDFS/S3). Returns the number of files written."""
     os.makedirs(path, exist_ok=True)
     avsc_json = json.dumps(avsc) if isinstance(avsc, dict) else avsc
-    cols = df.columns
 
     def write_partition(rows: Iterator[Any]) -> Iterator[int]:
-        records = [
-            {c: _plain(v) for c, v in zip(cols, row)} for row in rows
-        ]
+        records = [row.asDict(recursive=True) for row in rows]
         if not records:
             return iter(())
         blob = write_ocf(avsc_json, records, codec=codec)
@@ -182,12 +159,5 @@ def write_avro_py(
         with open(fname, "wb") as f:
             f.write(blob)
         return iter((1,))
-
-    def _plain(v: Any) -> Any:
-        if hasattr(v, "asDict"):
-            return {k: _plain(x) for k, x in v.asDict().items()}
-        if isinstance(v, (list, tuple)):
-            return [_plain(x) for x in v]
-        return v
 
     return df.rdd.mapPartitions(write_partition).sum()

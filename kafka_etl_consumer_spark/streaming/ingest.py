@@ -54,6 +54,7 @@ from kafka_etl_consumer_spark.avro_codec import (
     parse_schema,
     to_spark_struct,
 )
+from kafka_etl_consumer_spark.maintenance import _fs, _jpath
 from kafka_etl_consumer_spark.schema.registry import SchemaRegistry
 
 
@@ -358,19 +359,9 @@ def ingest(
         ckpt = f"{checkpoint_path}/{topic}"
 
         if layout == "hive":
-            part_cols = partition_columns(date_format, event_time_col)
-            out = decode_avro(branch, avsc, value_col="value", mode=mode, reader_avsc=reader)
-            for name, col in part_cols:
-                out = out.withColumn(name, col)
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", sink_path)
-                .option("checkpointLocation", ckpt)
-                .option("compression", "snappy")
-                .partitionBy(*[name for name, _ in part_cols])
-                .trigger(processingTime=trigger)
-                .queryName(f"ingest-{topic}")
-                .start()
+            q = _partitioned_parquet_sink(
+                decode_avro(branch, avsc, value_col="value", mode=mode, reader_avsc=reader),
+                sink_path, ckpt, trigger, f"ingest-{topic}", date_format, event_time_col,
             )
         else:
             q = (
@@ -386,6 +377,32 @@ def ingest(
             )
         queries.append(q)
     return queries
+
+
+def _partitioned_parquet_sink(
+    out: DataFrame,
+    path: str,
+    checkpoint: str,
+    trigger: str,
+    query_name: str,
+    date_format: str,
+    event_time_col: str | Column | None,
+) -> StreamingQuery:
+    """Start one topic's Snappy Parquet file-sink query, partitioned by
+    the :func:`partition_columns` of ``date_format``/``event_time_col``."""
+    part_cols = partition_columns(date_format, event_time_col)
+    for name, col in part_cols:
+        out = out.withColumn(name, col)
+    return (
+        out.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .option("compression", "snappy")
+        .partitionBy(*[name for name, _ in part_cols])
+        .trigger(processingTime=trigger)
+        .queryName(query_name)
+        .start()
+    )
 
 
 def _reference_layout_writer(
@@ -447,11 +464,8 @@ def _reference_layout_writer(
         # <id>__<date with / as ~>), then overwrite a bid-keyed directory —
         # both steps are replay-idempotent. Hadoop FS API so any scheme
         # (file://, hdfs://, s3a://) works, not just the local fs.
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        index = HPath(f"{sink_path}/_batch_index")
-        fs = index.getFileSystem(hconf)
+        fs, jvm = _fs(spark, sink_path)
+        index = _jpath(jvm, f"{sink_path}/_batch_index")
         fs.mkdirs(index)
         prefix = f"{batch_id}__"
         existing = [
@@ -463,7 +477,7 @@ def _reference_layout_writer(
             date_str = existing[0][len(prefix):].replace("~", "/")
         else:
             date_str = format_now(spark)
-            marker = HPath(f"{sink_path}/_batch_index/{prefix}{date_str.replace('/', '~')}")
+            marker = _jpath(jvm, f"{sink_path}/_batch_index/{prefix}{date_str.replace('/', '~')}")
             fs.create(marker, True).close()
         decoded.write.mode("overwrite").option("compression", "snappy").parquet(
             f"{sink_path}/{date_str}/bid={batch_id}"
@@ -586,24 +600,14 @@ def land_raw(
     run both landings from the same source query so one timestamp
     evaluation feeds both (single source of partition truth).
     """
-    queries: list[StreamingQuery] = []
-    part_cols = partition_columns(date_format, None)
-    for topic in topics:
-        out = source_df.filter(F.col("topic") == topic)
-        for name, col in part_cols:
-            out = out.withColumn(name, col)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", f"{output_path}/{topic}")
-            .option("checkpointLocation", f"{checkpoint_path}/{topic}")
-            .option("compression", "snappy")
-            .partitionBy(*[name for name, _ in part_cols])
-            .trigger(processingTime=trigger)
-            .queryName(f"land-raw-{topic}")
-            .start()
+    return [
+        _partitioned_parquet_sink(
+            source_df.filter(F.col("topic") == topic),
+            f"{output_path}/{topic}", f"{checkpoint_path}/{topic}", trigger,
+            f"land-raw-{topic}", date_format, None,
         )
-        queries.append(q)
-    return queries
+        for topic in topics
+    ]
 
 
 def backfill_decoded(
@@ -757,15 +761,11 @@ def backfill_decoded(
     # sink restarted with a fresh checkpoint — whose "orphans" are really
     # pre-restart COMMITTED files — it raises instead of deleting them;
     # re-land that data first or pass vacuum_force=True after verifying.
-    from kafka_etl_consumer_spark.maintenance import (
-        _fs as _hadoop_fs,
-        _jpath as _hpath,
-        vacuum_streaming_sink,
-    )
+    from kafka_etl_consumer_spark.maintenance import vacuum_streaming_sink
 
     silver = f"{output_path}/{topic}"
-    _sfs, _sjvm = _hadoop_fs(spark, silver)
-    if _sfs.exists(_hpath(_sjvm, f"{silver}/_spark_metadata")):
+    _sfs, _sjvm = _fs(spark, silver)
+    if _sfs.exists(_jpath(_sjvm, f"{silver}/_spark_metadata")):
         vacuum_streaming_sink(silver, delete=True, force=vacuum_force, spark=spark)
 
     # persist so the Avro decode — the dominant cost of this path — runs

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_etl_consumer_spark.maintenance import _fs, _jpath
 from kafka_etl_consumer_spark.operators.scd import merge_type1
 
 
@@ -62,10 +63,9 @@ def _read_lineage(spark: SparkSession, table_path: str) -> list[str]:
     first commit. Directories NOT in this list are either uncommitted
     partial writes or GC backlog — never something a marker-following
     reader can be scanning."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(_marker_path(table_path))
-    fs = path.getFileSystem(conf)
+    marker = _marker_path(table_path)
+    fs, jvm = _fs(spark, marker)
+    path = _jpath(jvm, marker)
     if not fs.exists(path):
         return []
     stream = fs.open(path)
@@ -119,11 +119,9 @@ def _write_marker(
     (active first); a bare string means a single-entry lineage."""
     if isinstance(versions, str):
         versions = [versions]
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(_marker_path(table_path))
-    fs = path.getFileSystem(conf)
-    out = fs.create(path, True)  # overwrite — atomic enough: tiny + idempotent
+    marker = _marker_path(table_path)
+    fs, jvm = _fs(spark, marker)
+    out = fs.create(_jpath(jvm, marker), True)  # overwrite — atomic enough: tiny + idempotent
     try:
         for v in versions:
             out.writeUTF(v)
@@ -131,22 +129,15 @@ def _write_marker(
         out.close()
 
 
-def _fs(spark: SparkSession, table_path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(table_path)
-    return jvm, path.getFileSystem(conf)
-
-
 def _fresh_version_name(spark: SparkSession, table_path: str, batch_id: int) -> str:
     """``_v<batch_id>``, or ``_v<batch_id>_r<n>`` if a prior attempt already
     created that directory (replay must not overwrite a directory the
     concurrent merge plan may be reading)."""
-    jvm, fs = _fs(spark, table_path)
+    fs, jvm = _fs(spark, table_path)
     attempt = 0
     while True:
         name = f"_v{batch_id}" if attempt == 0 else f"_v{batch_id}_r{attempt}"
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(os.path.join(table_path, name))):
+        if not fs.exists(_jpath(jvm, os.path.join(table_path, name))):
             return name
         attempt += 1
 
@@ -164,8 +155,8 @@ def _gc_old_versions(
     be scanning. Lineage membership deletes the uncommitted partial
     first and keeps exactly the versions a marker-following reader can
     have resolved."""
-    jvm, fs = _fs(spark, table_path)
-    root = jvm.org.apache.hadoop.fs.Path(table_path)
+    fs, jvm = _fs(spark, table_path)
+    root = _jpath(jvm, table_path)
     if not fs.exists(root):
         return
     keep = set(lineage)

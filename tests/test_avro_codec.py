@@ -14,6 +14,7 @@ from kafka_etl_consumer_spark.avro_codec import (
     from_spark_struct,
     parse_schema,
     to_spark_struct,
+    to_spark_type,
 )
 from kafka_etl_consumer_spark.fixtures import ITEM_VIEW_EVENT_AVSC, item_view_events
 
@@ -155,6 +156,106 @@ def test_union_numeric_widening():
     assert decode_record(tree, encode_record(tree, {"il": 2**50, "fd": None})) == {
         "il": 2**50, "fd": None,
     }
+
+
+def _pack(fmt, v):
+    import struct
+
+    return struct.pack(fmt, v)
+
+
+# union → (Spark type, nullable, [(payload, decoded value)]): one payload per
+# branch, hand-written (branch index, then the branch value, zigzag varints)
+UNION_SHAPES = [
+    (["null"], T.StructType([]), True, [(b"\x00", None)]),
+    (["null", "int"], T.IntegerType(), True, [(b"\x00", None), (b"\x02\x0a", 5)]),
+    (["int", "long"], T.LongType(), False, [(b"\x00\x0a", 5), (b"\x02\x0a", 5)]),
+    (
+        ["null", "float", "double"], T.DoubleType(), True,
+        [(b"\x00", None), (b"\x02" + _pack("<f", 2.5), 2.5), (b"\x04" + _pack("<d", 2.5), 2.5)],
+    ),
+    (
+        ["int", "string"],
+        T.StructType([
+            T.StructField("member0", T.IntegerType(), True),
+            T.StructField("member1", T.StringType(), True),
+        ]),
+        False,
+        [
+            (b"\x00\x0a", {"member0": 5, "member1": None}),
+            (b"\x02\x02s", {"member0": None, "member1": "s"}),
+        ],
+    ),
+    (
+        ["string", "null", "long"],
+        T.StructType([
+            T.StructField("member0", T.StringType(), True),
+            T.StructField("member1", T.LongType(), True),
+        ]),
+        True,
+        [
+            (b"\x00\x02s", {"member0": "s", "member1": None}),
+            (b"\x02", None),
+            (b"\x04\x0a", {"member0": None, "member1": 5}),
+        ],
+    ),
+    (
+        ["string", "bytes"],
+        T.StructType([
+            T.StructField("member0", T.StringType(), True),
+            T.StructField("member1", T.BinaryType(), True),
+        ]),
+        False,
+        [
+            (b"\x00\x02s", {"member0": "s", "member1": None}),
+            (b"\x02\x02s", {"member0": None, "member1": b"s"}),
+        ],
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "union,spark_type,nullable,cases", UNION_SHAPES, ids=[json.dumps(u[0]) for u in UNION_SHAPES]
+)
+def test_union_shape(union, spark_type, nullable, cases):
+    # one rule says how a union lands: the Spark type, the decoded value's
+    # shape and the encoder's branch choice must all agree with it
+    tree = parse_schema(json.dumps(union))
+    assert to_spark_type(tree) == (spark_type, nullable)
+    for payload, value in cases:
+        assert decode_record(tree, payload) == value
+        assert decode_record(tree, encode_record(tree, value)) == value
+
+
+def test_dotted_name_is_the_fullname():
+    # Avro spec, Names: a dotted name is already a fullname and its
+    # namespace attribute is ignored, so a reader of the same fullname
+    # resolves it
+    writer = parse_schema(json.dumps({
+        "type": "record", "name": "com.acme.E", "namespace": "other",
+        "fields": [{"name": "x", "type": "int"}],
+    }))
+    reader = parse_schema(json.dumps({
+        "type": "record", "name": "com.acme.E", "fields": [{"name": "x", "type": "long"}],
+    }))
+    assert writer["name"] == "com.acme.E"
+    assert decode_record(writer, encode_record(writer, {"x": 3}), reader) == {"x": 3}
+
+
+def test_nested_type_inherits_the_dotted_namespace():
+    # a type nested in "com.acme.E" without a namespace of its own is
+    # "com.acme.I", and may be referred to by that fullname
+    tree = parse_schema(json.dumps({
+        "type": "record", "name": "com.acme.E", "fields": [
+            {"name": "a", "type": {"type": "record", "name": "I",
+                                   "fields": [{"name": "v", "type": "int"}]}},
+            {"name": "b", "type": "com.acme.I"},
+        ],
+    }))
+    assert tree["fields"][1]["type"] is tree["fields"][0]["type"]
+    assert tree["fields"][0]["type"]["name"] == "com.acme.I"
+    row = {"a": {"v": 1}, "b": {"v": 2}}
+    assert decode_record(tree, encode_record(tree, row)) == row
 
 
 LOGICAL_AVSC = {

@@ -3,8 +3,11 @@ bytes-level, DataFrame-level, and the scan_avro fallback path."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
+from kafka_etl_consumer_spark.avro_codec import encode_record, parse_schema
 from kafka_etl_consumer_spark.avro_ocf import (
     read_ocf,
     scan_avro_py,
@@ -13,6 +16,7 @@ from kafka_etl_consumer_spark.avro_ocf import (
 )
 from kafka_etl_consumer_spark.fixtures import ITEM_VIEW_EVENT_AVSC, item_view_events
 from kafka_etl_consumer_spark.sources.scan import scan_avro
+from kafka_etl_consumer_spark.streaming.ingest import decode_avro
 
 NATION_AVSC = """{
   "type": "record", "name": "Nation", "fields": [
@@ -60,3 +64,23 @@ def test_write_avro_py_multiple_partitions(spark, sf_dir, tmp_path):
     assert write_avro_py(nation, out, NATION_AVSC) == 3  # one file/partition
     back = scan_avro_py(spark, out, NATION_AVSC)
     assert back.count() == 25
+
+
+def test_write_avro_py_map_of_union(spark, tmp_path):
+    # a map whose values are a multi-branch union decodes to a map of
+    # member structs; writing it back must descend into the map values
+    avsc = json.dumps({
+        "type": "record", "name": "R", "fields": [
+            {"name": "m", "type": {"type": "map", "values": ["int", "string"]}}],
+    })
+    tree = parse_schema(avsc)
+    rows = [
+        {"m": {"a": {"member0": 1, "member1": None}, "b": {"member0": None, "member1": "x"}}},
+        {"m": {}},
+    ]
+    raw = spark.createDataFrame([(encode_record(tree, r),) for r in rows], "value binary")
+    decoded = decode_avro(raw, avsc)
+    out = str(tmp_path / "map_union")
+    assert write_avro_py(decoded.coalesce(1), out, avsc) == 1
+    back = [r.asDict(recursive=True) for r in scan_avro_py(spark, out, avsc).collect()]
+    assert sorted(back, key=lambda r: len(r["m"])) == sorted(rows, key=lambda r: len(r["m"]))
