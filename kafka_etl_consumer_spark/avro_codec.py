@@ -5,9 +5,8 @@ Confluent magic byte — a bare ``binaryDecoder`` over the whole message,
 AbstractAvroDeserializeService.java:46-60 in the reference). Spark's own
 ``from_avro`` lives in the external ``spark-avro`` jar, which is not part of
 a stock PySpark install; this module provides the same semantics with zero
-JVM dependencies. ``decode_avro`` (streaming/ingest.py) prefers the JVM
-path when the jar is present and falls back to this codec via an
-Arrow-batched ``mapInPandas`` otherwise.
+JVM dependencies. ``decode_avro`` (streaming/ingest.py) always decodes with
+this codec, through an Arrow-batched ``mapInPandas``.
 
 Decoding has one entry point, :func:`decode_record` (:func:`decoder` gives
 the same per-value function over a :class:`Reader`, for framed streams such
@@ -465,7 +464,7 @@ _PROMOTE = {
     ("long", "double"): float,
     ("float", "double"): float,
     ("string", "bytes"): lambda v: v.encode("utf-8"),
-    ("bytes", "string"): lambda v: v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else v,
+    ("bytes", "string"): lambda v: v.decode("utf-8"),
 }
 
 
@@ -552,14 +551,11 @@ def _build(w: Any, rd: Any, built: dict):
     if not _match(w, rd):
         return _fail(f"{wt!r} does not match or promote to {rt!r}")
     if wt in _PRIMITIVES:  # possibly logical-typed
+        # as Avro's resolver: the writer's base value, promoted, then
+        # converted by the reader's logical type alone (the writer's is
+        # ignored), so the value matches the reader's Spark type
         f = _READ_PRIMITIVE[wt]
-        # the reader's logical annotation applies only when the writer had
-        # none; converting a writer-logical value twice would corrupt it
-        for conv in (
-            _from_base(w),
-            _PROMOTE.get((wt, rt)),
-            None if isinstance(w, dict) else _from_base(rd),
-        ):
+        for conv in (_PROMOTE.get((wt, rt)), _from_base(rd)):
             if conv is not None:
                 f = _then(f, conv)
         return f

@@ -42,9 +42,8 @@ FROM h
 @register("ingest_roundtrip_decode", _INGEST_ORACLE)
 def ingest_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode 500 ItemViewEvents to binary Avro, decode them through the
-    SAME ``decode_avro`` stage streaming ingest uses (Arrow ``mapInPandas``
-    pure-Python codec here; JVM ``from_avro`` picks itself when the jar is
-    present), and flatten the scalar fields the oracle can rebuild.
+    SAME ``decode_avro`` stage streaming ingest uses (the pure-Python codec
+    through Arrow ``mapInPandas``), and flatten the scalar fields the oracle can rebuild.
 
     ``sf_dir`` is unused: the input is the reference's producer fixture
     (GenericRecordKafkaProducer.java:58-96 of the reference), not a table.

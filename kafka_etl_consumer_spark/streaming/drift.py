@@ -34,7 +34,6 @@ from pyspark.sql import types as T
 
 __all__ = [
     "page_hinkley_monitor",
-    "page_hinkley_monitor_tws",
     "cusum_monitor",
     "adwin_monitor",
     "adwin_insert",
@@ -196,106 +195,6 @@ def page_hinkley_monitor(
         .groupBy(key_col)
         .applyInPandasWithState(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def page_hinkley_monitor_tws(
-    df: DataFrame,
-    key_col: str = "series",
-    ts_col: str = "ts",
-    value_col: str = "m",
-    delta: float = 0.1,
-    lam: float = 5.0,
-) -> DataFrame:
-    """:func:`page_hinkley_monitor` on the ``transformWithStateInPandas``
-    API (Spark 4.x arbitrary-state v2) — same recurrence, same state
-    layout (one ValueState of six scalars per key), same output contract,
-    so tests/test_stream_drift.py asserts both paths emit identical final
-    state. Same env gate as ``running_totals_tws``: the v2 state server
-    speaks protobuf and needs the RocksDB state store provider, so the
-    parity test self-skips where the lib is absent (CAPABILITIES.md)."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_obs", T.LongType()),
-            T.StructField("ph", T.DoubleType()),
-            T.StructField("max_ph", T.DoubleType()),
-            T.StructField("drift_detected", T.BooleanType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("sum_x", T.DoubleType()),
-            T.StructField("u", T.DoubleType()),
-            T.StructField("min_u", T.DoubleType()),
-            T.StructField("max_ph", T.DoubleType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
-    )
-
-    class _PageHinkley(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ph", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, sum_x, u, min_u, max_ph, alarm = self._state.get()
-            else:
-                n, sum_x, u, min_u, max_ph, alarm = 0, 0.0, 0.0, 0.0, 0.0, 0
-            ph = max_ph
-            # Same chunk-spanning contract as update() above: concat all
-            # Arrow chunks for this key before the single event-time sort.
-            chunks = [pdf for pdf in rows if len(pdf)]
-            batch = (
-                pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-                else (chunks[0] if chunks else None)
-            )
-            if batch is not None:
-                for x in batch.sort_values(ts_col, kind="mergesort")[value_col]:
-                    n += 1
-                    sum_x += float(x)
-                    u += float(x) - sum_x / n - delta
-                    min_u = min(min_u, u)
-                    ph = u - min_u
-                    max_ph = max(max_ph, ph)
-                    if alarm == 0 and ph > lam:
-                        alarm = n
-            self._state.update((n, sum_x, u, min_u, max_ph, alarm))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_obs": [n],
-                    "ph": [ph],
-                    "max_ph": [max_ph],
-                    "drift_detected": [alarm > 0],
-                    "alarm_seq": [alarm],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.select(
-            F.col(key_col).cast("string").alias(key_col),
-            F.col(ts_col),
-            F.col(value_col),
-        )
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=_PageHinkley(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -5,9 +5,9 @@ Reference semantics being reproduced (SURVEY.md §2.1):
          (ETLTask.java:236,261-274)        → one streaming source, one
          filtered branch per topic
 - S3     per-topic binary-Avro decode (AbstractAvroDeserializeService.java:46-60)
-         → JVM ``from_avro`` when spark-avro is on the classpath, else the
-         pure-Python codec through Arrow-batched ``mapInPandas``. Like the
-         reference, each message is decoded once, on its way to the writer:
+         → the pure-Python codec through Arrow-batched ``mapInPandas``.
+         Like the reference, each message is decoded once, on its way to
+         the writer:
          inside the ``foreachBatch`` writer for ``layout='reference'``
          (after a raw-row emptiness test), in the streaming plan for
          ``layout='hive'``
@@ -37,11 +37,9 @@ anywhere in this pipeline — decode and write are narrow.
 from __future__ import annotations
 
 import enum
-import weakref
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,29 +92,15 @@ def _fully_nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-# SparkContext → whether spark-avro is loadable; the classpath is fixed for
-# the life of a context, so the check runs once per context
-_SPARK_AVRO_LOADABLE: "weakref.WeakKeyDictionary[SparkContext, bool]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _spark_avro_on_classpath(sc: SparkContext) -> bool:
-    # the class JVM from_avro instantiates; without it analysis fails with
-    # AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE
-    return sc._jvm.org.apache.spark.util.Utils.classIsLoadable(
-        "org.apache.spark.sql.avro.AvroDataToCatalyst"
-    )
-
-
-def _jvm_from_avro_available(spark: SparkSession) -> bool:
-    """Whether JVM ``from_avro`` is usable in ``spark``: one classpath check
-    per SparkContext, cached, so building a decode per micro-batch costs no
-    plan-time probe."""
-    sc = spark.sparkContext
-    if sc not in _SPARK_AVRO_LOADABLE:
-        _SPARK_AVRO_LOADABLE[sc] = _spark_avro_on_classpath(sc)
-    return _SPARK_AVRO_LOADABLE[sc]
+def _permissive(mode: str, corrupt_col: str | None = None) -> bool:
+    """Whether ``mode`` is PERMISSIVE; raises for anything other than
+    FAILFAST/PERMISSIVE, or for a ``corrupt_col`` outside PERMISSIVE."""
+    m = mode.upper()
+    if m not in ("FAILFAST", "PERMISSIVE"):
+        raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode!r}")
+    if corrupt_col is not None and m != "PERMISSIVE":
+        raise ValueError("corrupt_col requires mode='PERMISSIVE'")
+    return m == "PERMISSIVE"
 
 
 def decode_avro(
@@ -136,7 +120,7 @@ def decode_avro(
 
     ``mode``: FAILFAST raises on a corrupt payload (the reference's
     behavior, AbstractAvroDeserializeService.java:56-59); PERMISSIVE yields
-    an all-null record instead.
+    an all-null record instead. Any other mode raises ``ValueError``.
 
     ``corrupt_col`` (PERMISSIVE only): additionally carry the RAW bytes of
     payloads that failed to decode (null for good rows) — the dead-letter
@@ -157,41 +141,17 @@ def decode_avro(
     string⇄bytes), union branches re-match against the reader union
     (a multi-branch reader union lands as its member struct), and enum
     symbols fall back to the reader's enum ``default``. Output
-    columns and types come from the reader schema. Always the Python
-    decoder path — JVM ``from_avro`` takes one schema with no
-    reader/writer split.
+    columns and types come from the reader schema.
 
-    Prefers the JVM ``from_avro`` (whole-stage codegen, zero Python) when
-    spark-avro is loaded; otherwise decodes with the pure-Python codec in
-    Arrow-batched ``mapInPandas``, still partition-parallel.
-    ``corrupt_col`` always uses the Python decoder: JVM PERMISSIVE
-    ``from_avro`` yields an all-null-FIELDS row for a corrupt payload, never
-    a null struct, so there is no JVM-side signal to capture the raw bytes
-    from (and an all-fields-null test would false-positive on a legitimately
-    all-null record).
+    Decodes with the pure-Python codec in Arrow-batched ``mapInPandas``,
+    partition-parallel.
     """
+    permissive = _permissive(mode, corrupt_col)
     keep = list(keep_cols)
     struct_schema = to_spark_struct(reader_avsc if reader_avsc is not None else avsc)
-    if corrupt_col is not None and mode.upper() != "PERMISSIVE":
-        raise ValueError("corrupt_col requires mode='PERMISSIVE'")
-
-    # reader_avsc always takes the Python decoder: JVM from_avro has no
-    # reader/writer split — the one schema it takes is both.
-    if (
-        corrupt_col is None
-        and reader_avsc is None
-        and _jvm_from_avro_available(df.sparkSession)
-    ):
-        from pyspark.sql.avro.functions import from_avro
-
-        rec = from_avro(F.col(value_col), avsc, {"mode": mode})
-        base = df.select(*keep, rec.alias("__r"))
-        return base.select(*keep, "__r.*")
-
     writer_tree = parse_schema(avsc)
     reader_tree = None if reader_avsc is None else parse_schema(reader_avsc)
     field_names = [f.name for f in struct_schema.fields]
-    permissive = mode.upper() == "PERMISSIVE"
     if permissive:
         # a corrupt payload becomes an all-null record → every field
         # (including non-null Avro fields) must admit null in the output
@@ -350,6 +310,7 @@ def ingest(
         raise ValueError(f"layout must be reference|hive, got {layout!r}")
     if event_time_col is not None and layout != "hive":
         raise ValueError("event_time_col requires layout='hive'")
+    _permissive(mode)  # "reference" decodes only inside a batch: check now
     queries: list[StreamingQuery] = []
     for topic in topics:
         avsc = registry.avsc(topic)
@@ -519,13 +480,12 @@ def strip_registry_framing(
     with it, filter ``corrupt_col IS NOT NULL`` to a quarantine table
     for replay, exactly like decode_avro's ``corrupt_col``.
     """
-    if corrupt_col is not None and mode.upper() != "PERMISSIVE":
-        raise ValueError("corrupt_col requires mode='PERMISSIVE'")
+    permissive = _permissive(mode, corrupt_col)
     v = F.col(value_col)
     ok = (F.length(v) >= 5) & (F.substring(v, 1, 1) == F.lit(bytes([0])))
     sid = F.conv(F.hex(F.substring(v, 2, 4)), 16, 10).cast("int")
     body = F.expr(f"substring({value_col}, 6, length({value_col}) - 5)")
-    if mode.upper() == "FAILFAST":
+    if not permissive:
         err = F.raise_error(
             F.concat(
                 F.lit("strip_registry_framing: bad magic byte or truncated "
@@ -540,11 +500,9 @@ def strip_registry_framing(
         # any raise_error embedded only there — FAILFAST would silently
         # degrade to PERMISSIVE-null for bad rows
         body_out = F.when(ok, body).otherwise(err.cast("binary"))
-    elif mode.upper() == "PERMISSIVE":
+    else:
         sid_out = F.when(ok, sid)
         body_out = F.when(ok, body)
-    else:
-        raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode!r}")
     others = [c for c in df.columns if c != value_col]
     out_cols = [*others, sid_out.alias(schema_id_col), body_out.alias(value_col)]
     if corrupt_col is not None:

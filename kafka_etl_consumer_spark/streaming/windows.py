@@ -151,76 +151,6 @@ def running_totals(
     )
 
 
-def running_totals_tws(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """:func:`running_totals` on the ``transformWithStateInPandas`` API
-    (Spark 4.x arbitrary-state v2) — same per-key lifetime (n, total) state,
-    same output contract, so the test suite asserts both paths agree.
-
-    Why both exist: ``applyInPandasWithState`` is the widely-deployed v1;
-    transformWithState is its successor with composite state (value/list/map
-    per key), timers, and TTL — the right target for NEW stateful operators.
-    State layout here is one ValueState[(long, double)] per key; requires
-    the RocksDB state store provider (bundled with Spark 4; set
-    ``spark.sql.streaming.stateStore.providerClass`` before query start)
-    and the ``protobuf`` Python package (the state-server wire protocol —
-    part of Spark's standard Python requirements, absent in this sandbox,
-    so the parity test in tests/test_stateful.py env-gates on it)."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, total = self._state.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"key": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.select(F.col(key_col), F.col(value_col))
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def streaming_first_seen(
     df: DataFrame,
     sink_path: str,

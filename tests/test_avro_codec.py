@@ -399,6 +399,35 @@ def test_schema_resolution_promotions_unions_enums_skip():
         decode_record(writer, payload, bad_promo)
 
 
+def _one_field(t) -> dict:
+    return parse_schema(json.dumps({"type": "record", "name": "R", "fields": [{"name": "v", "type": t}]}))
+
+
+def test_writer_logical_type_is_ignored_by_a_plain_reader():
+    # Avro resolution converts by the reader's logical type alone: a writer
+    # timestamp-millis long read as a plain long stays the long, matching
+    # the reader's Spark type
+    writer = _one_field({"type": "long", "logicalType": "timestamp-millis"})
+    reader = _one_field("long")
+    payload = encode_record(writer, {"v": 1000})
+    got = decode_record(writer, payload, reader)
+    assert got == {"v": 1000} and type(got["v"]) is int
+    # the reader's own logical type still applies, to a plain writer too
+    ts = _one_field({"type": "long", "logicalType": "timestamp-millis"})
+    import datetime as dt
+
+    assert decode_record(reader, payload, ts) == {"v": dt.datetime(1970, 1, 1, 0, 0, 1)}
+
+
+def test_promotion_runs_on_the_writer_base_value():
+    # a writer date int read as a reader long: int -> long on the day
+    # count, not on a datetime.date
+    writer = _one_field({"type": "int", "logicalType": "date"})
+    payload = encode_record(writer, {"v": 19_782})
+    assert decode_record(writer, payload, _one_field("long")) == {"v": 19_782}
+    assert decode_record(writer, payload, _one_field("double")) == {"v": 19_782.0}
+
+
 def test_out_of_range_branch_or_symbol_index_is_corrupt():
     # a corrupt payload's union branch or enum symbol index, negative or
     # past the end, fails the decode (FAILFAST raises, PERMISSIVE

@@ -356,34 +356,6 @@ def test_reader_schema_evolution(spark):
     assert got == [(0, 10, "web", None), (1, 11, "web", None), (2, 12, "web", None)]
 
 
-def test_corrupt_col_never_takes_jvm_path(spark, monkeypatch):
-    """ADVICE r1: JVM PERMISSIVE from_avro returns all-null-FIELDS rows for
-    corrupt payloads (never a null struct), so a JVM-side dead-letter check
-    silently drops them. decode_avro must route corrupt_col through the
-    Python decoder even when the jar looks available — forcing the probe to
-    True proves the branch: the JVM path would crash here (no jar), the
-    Python path captures the bytes."""
-    import sys
-
-    ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
-    monkeypatch.setattr(ing, "_jvm_from_avro_available", lambda *a: True)
-    schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
-    good = encode_record(schema, item_view_events(1)[0])
-    df = spark.createDataFrame(
-        [
-            Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(good)),
-            Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(b"\x07broken")),
-        ],
-        ENVELOPE,
-    )
-    out = ing.decode_avro(
-        df, ITEM_VIEW_EVENT_AVSC, keep_cols=["topic"],
-        mode="PERMISSIVE", corrupt_col="_corrupt",
-    )
-    dead = out.filter(F.col("_corrupt").isNotNull()).collect()
-    assert len(dead) == 1 and bytes(dead[0]._corrupt) == b"\x07broken"
-
-
 def test_reference_layout_idempotent_replay(spark, tmp_path):
     """Chaos-replay parity (VERDICT r1 item 6): after a crash mid-batch,
     Structured Streaming re-invokes foreachBatch with the SAME batch_id.
@@ -542,28 +514,6 @@ def test_decode_avro_reader_equal_to_writer_multibranch_union(spark):
     assert sorted(resolved.collect(), key=lambda r: r.id) == plain_rows
 
 
-def test_from_avro_probe_runs_once_per_session(spark, monkeypatch):
-    """The spark-avro classpath check runs once per SparkContext, not on
-    every decode_avro build (one build per micro-batch in the reference
-    layout)."""
-    import sys
-    import weakref
-
-    ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
-    probes = []
-
-    def probe(sc):
-        probes.append(sc)
-        return False
-
-    monkeypatch.setattr(ing, "_SPARK_AVRO_LOADABLE", weakref.WeakKeyDictionary())
-    monkeypatch.setattr(ing, "_spark_avro_on_classpath", probe)
-    df = _encoded_events_df(spark, 2)
-    decode_avro(df, ITEM_VIEW_EVENT_AVSC)
-    decode_avro(df, ITEM_VIEW_EVENT_AVSC, mode="PERMISSIVE")
-    assert probes == [spark.sparkContext]
-
-
 def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
     """End-to-end idempotent reference layout across a stop/restart."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
@@ -679,30 +629,6 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path):
     )
 
 
-def test_jvm_python_avro_decode_parity(spark):
-    """VERDICT r1 item 4: when spark-avro IS loadable (a real cluster), the
-    JVM ``from_avro`` branch and the pure-Python codec must produce the same
-    rows for the same payloads. In this container the jar is absent, so the
-    test records the branch choice and skips — on a cluster it runs live."""
-    import sys
-
-    df = _encoded_events_df(spark, 6)
-    ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
-    if not ing._jvm_from_avro_available(spark):
-        pytest.skip(
-            "spark-avro not loadable → decode_avro takes the pure-Python "
-            "mapInPandas branch (tested everywhere else in this file)"
-        )
-    jvm_rows = ing.decode_avro(df, ITEM_VIEW_EVENT_AVSC).collect()
-    orig = ing._jvm_from_avro_available
-    try:
-        ing._jvm_from_avro_available = lambda *a: False
-        py_rows = ing.decode_avro(df, ITEM_VIEW_EVENT_AVSC).collect()
-    finally:
-        ing._jvm_from_avro_available = orig
-    assert sorted(map(str, jvm_rows)) == sorted(map(str, py_rows))
-
-
 def test_decode_avro_logical_types_and_union_struct(spark):
     # Logical types land as real Spark types through the full mapInPandas
     # decode path (date/timestamp/decimal), and a multi-branch union lands
@@ -814,6 +740,50 @@ def test_registry_framing_roundtrip_and_decode(spark):
     # would eliminate it and bad rows would pass as NULL payloads
     with pytest.raises(Exception, match="magic"):
         strip_registry_framing(bad, mode="FAILFAST").select("value").collect()
+
+
+def test_decode_avro_plain_reader_over_writer_logical_type(spark):
+    # a writer timestamp-millis long read as a plain reader long lands as
+    # the bigint values the reader's Spark type declares, not datetimes
+    import json
+
+    writer = json.dumps({"type": "record", "name": "E", "fields": [
+        {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}}]})
+    reader = json.dumps({"type": "record", "name": "E", "fields": [
+        {"name": "at", "type": "long"}]})
+    tree = parse_schema(writer)
+    millis = [0, 1000, 1_700_000_000_123]
+    df = spark.createDataFrame(
+        [Row(topic="t", value=bytearray(encode_record(tree, {"at": ms}))) for ms in millis],
+        ENVELOPE,
+    )
+    out = decode_avro(df, writer, reader_avsc=reader)
+    assert dict(out.dtypes) == {"at": "bigint"}
+    assert sorted(r.at for r in out.collect()) == millis
+
+
+@pytest.mark.parametrize("layout", ["reference", "hive"])
+def test_unknown_mode_raises_before_any_query_starts(spark, tmp_path, layout):
+    # only FAILFAST/PERMISSIVE exist; anything else (DROPMALFORMED, a typo)
+    # must not quietly run as FAILFAST, and ingest() refuses it up front
+    with pytest.raises(ValueError, match="FAILFAST or PERMISSIVE"):
+        decode_avro(_encoded_events_df(spark, 1), ITEM_VIEW_EVENT_AVSC, mode="DROPMALFORMED")
+    stream = spark.readStream.format("rate").load().select(
+        F.lit(ITEM_VIEW_EVENT_TOPIC).alias("topic"), F.lit(b"x").alias("value")
+    )
+    reg = DictSchemaRegistry({ITEM_VIEW_EVENT_TOPIC: ITEM_VIEW_EVENT_AVSC})
+    before = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="FAILFAST or PERMISSIVE"):
+            ingest(
+                stream, reg, str(tmp_path / "out"), topics=[ITEM_VIEW_EVENT_TOPIC],
+                checkpoint_path=str(tmp_path / "ckpt"), layout=layout, mode="FAILFST",
+            )
+    finally:
+        started = [q for q in spark.streams.active if q.id not in before]
+        for q in started:
+            q.stop()
+    assert not started
 
 
 def test_reader_schema_promotion_through_dataframe(spark):

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
@@ -65,53 +63,3 @@ def test_running_totals_accumulates_across_batches(spark, tmp_path):
     assert latest[2] == (1, 5.0)
     # and batch 1's intermediate emission for user 1 was (2, 3.0)
     assert (1, 2, 3.0) in {(r.key, r.n_events, r.total_value) for r in rows}
-
-
-def test_transform_with_state_matches_v1(spark, tmp_path):
-    # the v2 (transformWithStateInPandas) operator must produce the same
-    # final per-key state as the v1 applyInPandasWithState path.
-    # transformWithState's Python state server speaks protobuf; the lib is
-    # not in this container, so this test self-skips where it can't run
-    # (same env-gating pattern as the JVM from_avro parity test; see
-    # CAPABILITIES.md for the full activation map).
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState state server needs protobuf",
-    )
-    from kafka_etl_consumer_spark.streaming.windows import running_totals_tws
-
-    src = str(tmp_path / "src_tws")
-    _stage(spark, src, [(1, 0, 1, 1.0), (2, 1, 1, 2.0), (3, 2, 2, 5.0)])
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
-        )
-        out = running_totals_tws(stream, key_col="user_id", value_col="value")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_tws")
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _stage(spark, src, [(4, 3, 1, 10.0)])
-            q.processAllAvailable()
-            rows = spark.sql("SELECT key, n_events, total_value FROM running_tws").collect()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    latest = {}
-    for r in rows:
-        latest[r.key] = (r.n_events, r.total_value)
-    assert latest[1] == (3, 13.0)
-    assert latest[2] == (1, 5.0)

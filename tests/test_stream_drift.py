@@ -179,60 +179,6 @@ def test_stream_restart_recovers_state(spark, tmp_path):
     assert final.drift_detected is (alarm_ref > 0)
 
 
-def test_drift_tws_matches_v1(spark, tmp_path):
-    # v2 (transformWithStateInPandas) must emit the same final state as
-    # the v1 path on the injected-drift series. Same protobuf/RocksDB env
-    # gate as test_stateful.test_transform_with_state_matches_v1
-    # (CAPABILITIES.md activation map).
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState state server needs protobuf",
-    )
-    from kafka_etl_consumer_spark.streaming.drift import page_hinkley_monitor_tws
-
-    base = dt.datetime(2024, 1, 1)
-    series = [50.0] * 10 + [70.0] * 5
-    src = str(tmp_path / "src_tws")
-    rows = [
-        Row(series="s", ts=base + dt.timedelta(days=i), m=v)
-        for i, v in enumerate(series)
-    ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        out = page_hinkley_monitor_tws(
-            stream, key_col="series", ts_col="ts", value_col="m"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ph_tws")
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            final = spark.sql(
-                "SELECT * FROM ph_tws ORDER BY n_obs DESC LIMIT 1"
-            ).collect()[0]
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert final.drift_detected is True
-    assert 11 <= final.alarm_seq <= 15
-    assert final.max_ph > 5.0
-
-
 def test_keys_keep_independent_state(spark, tmp_path):
     # two series in one stream: a drifting one and a flat one — per-key
     # state must not bleed (the flat key stays quiet)
