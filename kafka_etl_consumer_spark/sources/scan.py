@@ -8,10 +8,11 @@ flip types between runs when the data drifts — both unacceptable on a
 100 TB input. ``scan_csv``/``scan_json`` therefore take schema as a
 required argument; ``infer=True`` exists for exploration only.
 
-Avro container files need the spark-avro package (not in this container);
-``scan_avro`` gates on it and raises a clear error otherwise — raw Avro
-*message* decode (the reference's actual path) is served by
-streaming/ingest.decode_avro via the pure-Python codec.
+Avro container files are read by the pure-Python OCF reader
+(avro_ocf.scan_avro_py; there is no spark-avro jar), so ``scan_avro``
+takes a required reader schema. Raw Avro *message* decode (the
+reference's actual path) is served by streaming/ingest.decode_avro
+through the same codec.
 """
 
 from __future__ import annotations
@@ -65,22 +66,16 @@ def scan_json(
 
 
 def scan_avro(spark: SparkSession, path: str, avsc: str | dict | None = None) -> DataFrame:
-    """Avro object-container-file scan.
+    """Avro object-container-file scan with the pure-Python OCF reader
+    (avro_ocf.py), which REQUIRES an explicit reader schema ``avsc``."""
+    if avsc is None:
+        raise RuntimeError(
+            "scan_avro needs avsc=: the pure-Python OCF reader "
+            "(kafka_etl_consumer_spark.avro_ocf) takes an explicit reader schema"
+        )
+    from kafka_etl_consumer_spark.avro_ocf import scan_avro_py
 
-    Prefers spark-avro (JVM, splittable, codegen); without it on the
-    classpath, falls back to the pure-Python OCF reader (avro_ocf.py) —
-    which then REQUIRES an explicit reader schema ``avsc``."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as ex:
-        if avsc is None:
-            raise RuntimeError(
-                "spark-avro is not on the classpath; pass avsc= to use the "
-                "pure-Python OCF reader (kafka_etl_consumer_spark.avro_ocf)"
-            ) from ex
-        from kafka_etl_consumer_spark.avro_ocf import scan_avro_py
-
-        return scan_avro_py(spark, path, avsc)
+    return scan_avro_py(spark, path, avsc)
 
 
 def write_parquet(

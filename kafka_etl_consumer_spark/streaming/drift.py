@@ -20,9 +20,9 @@ the contract rounds to.
 
 Scale: state is six scalars per key — O(#keys), event volume only
 streams through; the shuffle is on the key column. The per-observation
-loop runs over one micro-batch's rows for one key inside an Arrow
-batch (pandas), the same cost class as every applyInPandasWithState
-operator here. Reference has no analytics surface (pass-through ETL,
+loop runs over one key's rows of one micro-batch (pandas), through the
+same ``_keyed_fold`` driver as every applyInPandasWithState operator
+here. Reference has no analytics surface (pass-through ETL,
 ETLTask.java:261-283 of mykidong/kafka-etl-consumer).
 """
 
@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from kafka_etl_consumer_spark.streaming.windows import _keyed_fold
 
 __all__ = [
     "page_hinkley_monitor",
@@ -117,85 +118,41 @@ def page_hinkley_monitor(
     observation index of the FIRST crossing (0 while undetected —
     the streaming stand-in for the batch twin's alarm_day).
 
-    Observations are applied in ``ts_col`` order within each batch;
-    cross-batch order is the arrival order (late data is the stream's
-    problem — put a watermark-deduped, time-bucketed aggregation in
-    front if observations can arrive out of order)."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_obs", T.LongType()),
-            T.StructField("ph", T.DoubleType()),
-            T.StructField("max_ph", T.DoubleType()),
-            T.StructField("drift_detected", T.BooleanType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
+    Observations fold in ``ts_col`` order under the ordering contract of
+    :func:`~kafka_etl_consumer_spark.streaming.windows._keyed_fold`."""
+    out_schema = (
+        "key string, n_obs long, ph double, max_ph double,"
+        " drift_detected boolean, alarm_seq long"
     )
-    # n, sum_x, u, min_u, max_ph, alarm_seq — sum (not incremental mean)
-    # so the running mean is sum/n exactly like the batch window avg
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("sum_x", T.DoubleType()),
-            T.StructField("u", T.DoubleType()),
-            T.StructField("min_u", T.DoubleType()),
-            T.StructField("max_ph", T.DoubleType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
+    # sum (not incremental mean) so the running mean is sum/n exactly
+    # like the batch window avg
+    state_schema = (
+        "n long, sum_x double, u double, min_u double, max_ph double, alarm_seq long"
     )
 
-    def update(key, pdfs, state):
-        if state.exists:
-            n, sum_x, u, min_u, max_ph, alarm = state.get
-        else:
-            n, sum_x, u, min_u, max_ph, alarm = 0, 0.0, 0.0, 0.0, 0.0, 0
+    def fold(prior, rows):
+        n, sum_x, u, min_u, max_ph, alarm = prior or (0, 0.0, 0.0, 0.0, 0.0, 0)
         ph = max_ph
-        # One key's micro-batch can span several Arrow chunks (rows >
-        # arrow.maxRecordsPerBatch); sorting per-chunk would fold
-        # observations in shuffle order across chunk boundaries. Concat
-        # first (bounded by one key's micro-batch) then sort ONCE so the
-        # in-batch event-time ordering contract holds regardless of
-        # chunking.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else (chunks[0] if chunks else None)
-        )
-        if batch is not None:
-            for x in batch.sort_values(ts_col, kind="mergesort")[value_col]:
-                n += 1
-                sum_x += float(x)
-                u += float(x) - sum_x / n - delta
-                min_u = min(min_u, u)
-                ph = u - min_u
-                max_ph = max(max_ph, ph)
-                if alarm == 0 and ph > lam:
-                    alarm = n
-        state.update((n, sum_x, u, min_u, max_ph, alarm))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_obs": [n],
-                "ph": [ph],
-                "max_ph": [max_ph],
-                "drift_detected": [alarm > 0],
-                "alarm_seq": [alarm],
-            }
-        )
+        for x in rows[value_col]:
+            n += 1
+            sum_x += float(x)
+            u += float(x) - sum_x / n - delta
+            min_u = min(min_u, u)
+            ph = u - min_u
+            max_ph = max(max_ph, ph)
+            if alarm == 0 and ph > lam:
+                alarm = n
+        return (n, sum_x, u, min_u, max_ph, alarm), (n, ph, max_ph, alarm > 0, alarm)
 
-    return (
+    return _keyed_fold(
         df.select(
-            F.col(key_col).cast("string").alias(key_col),
-            F.col(ts_col),
-            F.col(value_col),
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+            F.col(key_col).cast("string").alias(key_col), F.col(ts_col), F.col(value_col)
+        ),
+        key_col,
+        out_schema,
+        state_schema,
+        fold,
+        order_col=ts_col,
     )
 
 
@@ -223,77 +180,40 @@ def cusum_monitor(
     Emits one row per key per micro-batch it appears in:
     ``(key, n_obs, s, max_s, drift_detected, alarm_seq)``; alarm_seq is
     the 1-based index of the FIRST threshold crossing (0 while
-    undetected). Observations apply in ``ts_col`` order within each
-    micro-batch (all Arrow chunks concatenated first — same contract as
-    the PH monitor); cross-batch order is arrival order.
+    undetected). Observations fold in ``ts_col`` order under the
+    ordering contract of
+    :func:`~kafka_etl_consumer_spark.streaming.windows._keyed_fold`.
 
     Scale: five scalars of state per key; the only shuffle keys on the
     monitored series."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_obs", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-            T.StructField("max_s", T.DoubleType()),
-            T.StructField("drift_detected", T.BooleanType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
+    out_schema = (
+        "key string, n_obs long, s double, max_s double,"
+        " drift_detected boolean, alarm_seq long"
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("u", T.DoubleType()),
-            T.StructField("min_u", T.DoubleType()),
-            T.StructField("max_s", T.DoubleType()),
-            T.StructField("alarm_seq", T.LongType()),
-        ]
-    )
+    state_schema = "n long, u double, min_u double, max_s double, alarm_seq long"
 
-    def update(key, pdfs, state):
-        if state.exists:
-            n, u, min_u, max_s, alarm = state.get
-        else:
-            n, u, min_u, max_s, alarm = 0, 0.0, 0.0, 0.0, 0
+    def fold(prior, rows):
+        n, u, min_u, max_s, alarm = prior or (0, 0.0, 0.0, 0.0, 0)
         s = max_s
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else (chunks[0] if chunks else None)
-        )
-        if batch is not None:
-            for x in batch.sort_values(ts_col, kind="mergesort")[value_col]:
-                n += 1
-                u += float(x) - target - slack
-                min_u = min(min_u, u)
-                s = u - min_u
-                max_s = max(max_s, s)
-                if alarm == 0 and s > h:
-                    alarm = n
-        state.update((n, u, min_u, max_s, alarm))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_obs": [n],
-                "s": [s],
-                "max_s": [max_s],
-                "drift_detected": [alarm > 0],
-                "alarm_seq": [alarm],
-            }
-        )
+        for x in rows[value_col]:
+            n += 1
+            u += float(x) - target - slack
+            min_u = min(min_u, u)
+            s = u - min_u
+            max_s = max(max_s, s)
+            if alarm == 0 and s > h:
+                alarm = n
+        return (n, u, min_u, max_s, alarm), (n, s, max_s, alarm > 0, alarm)
 
-    return (
+    return _keyed_fold(
         df.select(
-            F.col(key_col).cast("string").alias(key_col),
-            F.col(ts_col),
-            F.col(value_col),
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+            F.col(key_col).cast("string").alias(key_col), F.col(ts_col), F.col(value_col)
+        ),
+        key_col,
+        out_schema,
+        state_schema,
+        fold,
+        order_col=ts_col,
     )
 
 
@@ -336,76 +256,43 @@ def adwin_monitor(
     found and history discarded), ``last_detect_seq`` the 1-based
     observation index of the LATEST shrink (ADWIN re-alarms on every
     change, unlike the one-shot alarm_seq of PH/CUSUM). Observations
-    apply in ``ts_col`` order within each micro-batch (all Arrow
-    chunks concatenated first — same ordering contract as the PH
-    monitor); cross-batch order is arrival order.
+    fold in ``ts_col`` order under the ordering contract of
+    :func:`~kafka_etl_consumer_spark.streaming.windows._keyed_fold`.
 
     Scale: O(log window) state per key; the only shuffle keys on the
     monitored series."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_obs", T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("win_mean", T.DoubleType()),
-            T.StructField("n_detections", T.LongType()),
-            T.StructField("last_detect_seq", T.LongType()),
-            T.StructField("drift_detected", T.BooleanType()),
-        ]
+    out_schema = (
+        "key string, n_obs long, width long, win_mean double,"
+        " n_detections long, last_detect_seq long, drift_detected boolean"
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("sums", T.ArrayType(T.DoubleType())),
-            T.StructField("counts", T.ArrayType(T.LongType())),
-            T.StructField("n_detections", T.LongType()),
-            T.StructField("last_detect_seq", T.LongType()),
-        ]
+    state_schema = (
+        "n long, sums array<double>, counts array<long>,"
+        " n_detections long, last_detect_seq long"
     )
 
-    def update(key, pdfs, state):
-        if state.exists:
-            n, sums, counts, n_det, last_seq = state.get
-            sums, counts = list(sums), list(counts)
-        else:
-            n, sums, counts, n_det, last_seq = 0, [], [], 0, 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else (chunks[0] if chunks else None)
-        )
-        if batch is not None:
-            for x in batch.sort_values(ts_col, kind="mergesort")[value_col]:
-                n += 1
-                adwin_insert(sums, counts, float(x), max_buckets)
-                if adwin_try_cut(sums, counts, delta, value_range):
-                    n_det += 1
-                    last_seq = n
-        state.update((n, sums, counts, n_det, last_seq))
+    def fold(prior, rows):
+        n, sums, counts, n_det, last_seq = prior or (0, [], [], 0, 0)
+        sums, counts = list(sums), list(counts)
+        for x in rows[value_col]:
+            n += 1
+            adwin_insert(sums, counts, float(x), max_buckets)
+            if adwin_try_cut(sums, counts, delta, value_range):
+                n_det += 1
+                last_seq = n
         width = int(sum(counts))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_obs": [n],
-                "width": [width],
-                "win_mean": [sum(sums) / width if width else 0.0],
-                "n_detections": [n_det],
-                "last_detect_seq": [last_seq],
-                "drift_detected": [n_det > 0],
-            }
+        win_mean = sum(sums) / width if width else 0.0
+        return (
+            (n, sums, counts, n_det, last_seq),
+            (n, width, win_mean, n_det, last_seq, n_det > 0),
         )
 
-    return (
+    return _keyed_fold(
         df.select(
-            F.col(key_col).cast("string").alias(key_col),
-            F.col(ts_col),
-            F.col(value_col),
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+            F.col(key_col).cast("string").alias(key_col), F.col(ts_col), F.col(value_col)
+        ),
+        key_col,
+        out_schema,
+        state_schema,
+        fold,
+        order_col=ts_col,
     )

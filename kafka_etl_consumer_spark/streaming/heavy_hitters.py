@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from kafka_etl_consumer_spark.streaming.windows import _keyed_fold
 
 __all__ = ["mg_reduce", "misra_gries_monitor"]
 
@@ -70,74 +71,34 @@ def misra_gries_monitor(
     ``counts`` are the surviving counters sorted by (count DESC, item
     ASC) — deterministic given the same ordered stream — and
     ``err_bound = floor(n_processed / (k + 1))`` is the worst-case
-    undercount of any estimate (the MG guarantee). Items are consumed
-    in ``ts_col`` order within each micro-batch (all Arrow chunks
-    concatenated first — the same ordering contract as the drift
-    monitors); cross-batch order is arrival order. The update is the
-    textbook one: increment a tracked item, adopt into a free slot,
-    else decrement ALL counters (dropping zeros) — each decrement
-    "spends" k+1 stream elements, which is where the n/(k+1) bound
-    comes from."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_processed", T.LongType()),
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("counts", T.ArrayType(T.LongType())),
-            T.StructField("err_bound", T.LongType()),
-        ]
+    undercount of any estimate (the MG guarantee). Items fold in
+    ``ts_col`` order under the ordering contract of
+    :func:`~kafka_etl_consumer_spark.streaming.windows._keyed_fold`.
+    The update is :func:`mg_reduce`, the one the batch twin runs."""
+    out_schema = (
+        "key string, n_processed long, items array<string>,"
+        " counts array<long>, err_bound long"
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("counts", T.ArrayType(T.LongType())),
-        ]
-    )
+    state_schema = "n long, items array<string>, counts array<long>"
 
-    def update(key, pdfs, state):
-        if state.exists:
-            n, items, counts = state.get
-            summary = dict(zip(list(items), list(counts)))
-        else:
-            n, summary = 0, {}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else (chunks[0] if chunks else None)
+    def fold(prior, rows):
+        n, items, counts = prior or (0, [], [])
+        n, summary = mg_reduce(
+            rows[item_col], k=k, n=n, summary=dict(zip(items, counts))
         )
-        if batch is not None:
-            n, summary = mg_reduce(
-                batch.sort_values(ts_col, kind="mergesort")[item_col],
-                k=k,
-                n=n,
-                summary=summary,
-            )
         ordered = sorted(summary.items(), key=lambda kv: (-kv[1], kv[0]))
-        state.update(
-            (n, [it for it, _ in ordered], [c for _, c in ordered])
-        )
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_processed": [n],
-                "items": [[it for it, _ in ordered]],
-                "counts": [[c for _, c in ordered]],
-                "err_bound": [n // (k + 1)],
-            }
-        )
+        items, counts = [it for it, _ in ordered], [c for _, c in ordered]
+        return (n, items, counts), (n, items, counts, n // (k + 1))
 
-    return (
+    return _keyed_fold(
         df.select(
             F.col(key_col).cast("string").alias(key_col),
             F.col(ts_col),
             F.col(item_col).cast("string").alias(item_col),
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+        ),
+        key_col,
+        out_schema,
+        state_schema,
+        fold,
+        order_col=ts_col,
     )

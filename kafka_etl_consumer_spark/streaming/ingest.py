@@ -627,7 +627,8 @@ def backfill_decoded(
 
     Scale shape (100 TB): the bronze scan partition-prunes to the named
     ``dt0`` values (plan-asserted in tests/test_backfill.py); decode is
-    the same JVM-or-Arrow path streaming uses, a narrow map and runs ONCE
+    the path streaming uses (the pure-Python codec through
+    ``mapInPandas``), a narrow map, and runs ONCE
     (the decoded frame is persisted across the count and the write); the
     write touches only the affected partition directories — untouched
     silver partitions are never read or rewritten, so a one-hour backfill

@@ -101,53 +101,85 @@ def streaming_dedup(
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def _keyed_fold(
+    df: DataFrame,
+    key_col: str,
+    out_schema: str,
+    state_schema: str,
+    fold,
+    order_col: str | None = None,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` driver behind every per-key
+    stateful operator here: the Structured Streaming model of arbitrary
+    state as one update function over a per-key state value.
+
+    ``df`` holds the key column and the columns ``fold`` reads. Each
+    micro-batch, for every key with rows in it, the driver concatenates
+    all Arrow chunks of that key's rows (a key spans several chunks once
+    it has more rows than ``arrow.maxRecordsPerBatch``), sorts them once
+    by ``order_col`` with a stable sort when it is given, and calls
+    ``fold(prior, rows)``. ``prior`` is the stored state tuple, or
+    ``None`` for a new key; ``fold`` returns ``(state, outputs)``, the
+    driver stores ``state`` and emits one row ``(key, *outputs)`` under
+    ``out_schema``. Both schemas are DDL strings.
+
+    Ordering contract: rows are folded in ``order_col`` order within one
+    micro-batch, whatever the chunking, and in arrival order across
+    micro-batches. Late data is the stream's problem: put a
+    watermark-deduped, time-bucketed aggregation in front if
+    observations can arrive out of order.
+
+    NoTimeout keeps a key's state forever; the state is whatever
+    ``state_schema`` holds, O(#keys), and the only shuffle is on
+    ``key_col``."""
+    import pandas as pd  # local import: streaming module stays light
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    # emit by name: the serializer concats these frames with its own
+    # schema-named padding rows, which misaligns integer-labelled columns
+    names = T.StructType.fromDDL(out_schema).fieldNames()
+
+    def update(key, pdfs, state):
+        rows = pd.concat(pdfs, ignore_index=True)
+        if order_col is not None:
+            rows = rows.sort_values(order_col, kind="mergesort")
+        new_state, outputs = fold(state.getOption, rows)
+        state.update(new_state)
+        yield pd.DataFrame([(key[0], *outputs)], columns=names)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
+
+
 def running_totals(
     df: DataFrame,
     key_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """CUSTOM stateful operator via ``applyInPandasWithState``: per-key
-    lifetime (n_events, total_value) maintained in the state store and
-    re-emitted every micro-batch the key appears in — the arbitrary-state
-    surface for operators that windowed aggs can't express (counters,
-    online models, custom sessionization).
+    """CUSTOM stateful operator on :func:`_keyed_fold`: per-key lifetime
+    (n_events, total_value) maintained in the state store and re-emitted
+    every micro-batch the key appears in — the arbitrary-state surface
+    for operators that windowed aggs can't express (counters, online
+    models, custom sessionization).
 
-    State is one (long, double) pair per key — O(#keys) regardless of
-    event volume; shuffle is on ``key_col`` only. NoTimeout keeps keys
-    forever (a lifetime counter); bound state for churning key spaces with
-    ``GroupStateTimeout.ProcessingTimeTimeout`` + ``state.setTimeoutDuration``
-    and drop the key on ``state.hasTimedOut``."""
-    import pandas as pd  # local import: streaming module stays light
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    State is one (long, double) pair per key, kept forever (a lifetime
+    counter); rows are summed in arrival order, so no ``order_col``."""
+    out_schema = "key long, n_events long, total_value double"
+    state_schema = "n long, total double"
 
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
+    def fold(prior, rows):
+        n, total = prior or (0, 0.0)
+        n += len(rows)
+        total += float(rows[value_col].sum())
+        return (n, total), (n, total)
 
-    def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"key": [key[0]], "n_events": [n], "total_value": [total]})
-
-    return (
-        df.select(F.col(key_col), F.col(value_col))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
+    return _keyed_fold(
+        df.select(F.col(key_col), F.col(value_col)),
+        key_col,
+        out_schema,
+        state_schema,
+        fold,
     )
 
 

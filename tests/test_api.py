@@ -53,6 +53,9 @@ def test_facade_end_to_end(spark, tmp_path):
         source_df=spark.readStream.schema(ENVELOPE).parquet(src_dir),
     )
     assert consumer.trigger == "1 minute"
+    # processAllAvailable returns only after a later trigger finds no new
+    # data: run at 1 s so the test waits for work, not for the minute
+    consumer.trigger = "1 second"
     queries = consumer.run()
     try:
         for q in queries:

@@ -44,6 +44,7 @@ def test_ingest_then_analyze(spark, tmp_path):
         layout="hive",
         date_format="yyyy-MM-dd",
         event_time_col=F.timestamp_millis(F.col("baseProperties.timestamp")),
+        trigger="1 second",
     )
     try:
         for q in queries:

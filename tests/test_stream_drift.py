@@ -7,12 +7,18 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_consumer_spark.plans import QUERIES
-from kafka_etl_consumer_spark.streaming.drift import page_hinkley_monitor
+from kafka_etl_consumer_spark.streaming.drift import (
+    adwin_monitor,
+    cusum_monitor,
+    page_hinkley_monitor,
+)
+from kafka_etl_consumer_spark.streaming.heavy_hitters import misra_gries_monitor
 
 SCHEMA = T.StructType(
     [
@@ -241,52 +247,6 @@ def test_stream_detects_injected_drift(spark, tmp_path):
     assert final.drift_detected is True
     assert 11 <= final.alarm_seq <= 15
     assert final.max_ph > 5.0
-
-
-def test_multi_chunk_batch_sorts_across_chunks(spark, tmp_path):
-    # One key's micro-batch arriving as SEVERAL Arrow chunks (rows >
-    # arrow.maxRecordsPerBatch) must still be folded in ts order across
-    # chunk boundaries — the r7 per-chunk sort folded in shuffle order.
-    # Shrink the Arrow batch size so a 40-row micro-batch spans >= 14
-    # chunks, feed the rows REVERSED, and require the unbroken Python
-    # recurrence on the ts-ordered series.
-    base = dt.datetime(2024, 1, 1)
-    series = [50.0] * 25 + [75.0] * 15
-    rows = [
-        Row(series="s", ts=base + dt.timedelta(days=i), m=v)
-        for i, v in enumerate(series)
-    ]
-    rows.reverse()  # arrival order is the anti-sorted order
-    src = str(tmp_path / "src_chunks")
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        out = page_hinkley_monitor(
-            stream, key_col="series", ts_col="ts", value_col="m"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ph_chunks")
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            final = spark.sql(
-                "SELECT * FROM ph_chunks ORDER BY n_obs DESC LIMIT 1"
-            ).collect()[0]
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    n_ref, max_ph_ref, alarm_ref = _python_ph(series)
-    assert final.n_obs == n_ref
-    assert abs(final.max_ph - max_ph_ref) < 1e-9
-    assert final.alarm_seq == alarm_ref
 
 
 # ---------------------------------------------------------------------------
@@ -670,3 +630,131 @@ def test_adwin_keys_keep_independent_state(spark, tmp_path):
     assert by_key["hot"].drift_detected
     assert not by_key["cold"].drift_detected
     assert by_key["cold"].width == len(flat)
+
+
+# ---------------------------------------------------------------------------
+# In-batch ordering, for every ordered monitor: one key's micro-batch
+# arriving as SEVERAL Arrow chunks must still fold in ts order
+# ---------------------------------------------------------------------------
+
+MG_SCHEMA = T.StructType(
+    [
+        T.StructField("series", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("item", T.StringType()),
+    ]
+)
+_MG_K = 3
+
+
+def _textbook_mg(items, k):
+    """Misra-Gries (1982) written here, not taken from mg_reduce: final
+    counters sorted by (count DESC, item ASC)."""
+    counters: dict[str, int] = {}
+    for x in items:
+        if x in counters:
+            counters[x] += 1
+        elif len(counters) < k:
+            counters[x] = 1
+        else:
+            counters = {it: c - 1 for it, c in counters.items() if c > 1}
+    return sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
+def _check_ph(final, xs):
+    n_ref, max_ph_ref, alarm_ref = _python_ph(xs)
+    assert final.n_obs == n_ref
+    assert abs(final.max_ph - max_ph_ref) < 1e-9
+    assert final.alarm_seq == alarm_ref
+
+
+def _check_cusum(final, xs):
+    n_ref, max_s_ref, alarm_ref = _python_cusum(xs)
+    assert final.n_obs == n_ref
+    assert abs(final.max_s - max_s_ref) < 1e-9
+    assert final.alarm_seq == alarm_ref
+
+
+def _check_adwin(final, xs):
+    n, width, mean, n_det, last_seq = _reference_adwin(xs)
+    assert final.n_obs == n
+    assert final.width == width
+    assert round(final.win_mean, 12) == round(mean, 12)
+    assert final.n_detections == n_det
+    assert final.last_detect_seq == last_seq
+
+
+def _check_mg(final, xs):
+    assert final.n_processed == len(xs)
+    assert list(zip(final.items, final.counts)) == _textbook_mg(xs, _MG_K)
+
+
+@pytest.mark.parametrize(
+    "monitor, schema, kwargs, xs, check",
+    [
+        pytest.param(
+            page_hinkley_monitor,
+            SCHEMA,
+            {"value_col": "m"},
+            [50.0] * 25 + [75.0] * 15,
+            _check_ph,
+            id="page_hinkley",
+        ),
+        pytest.param(
+            cusum_monitor,
+            SCHEMA,
+            {"value_col": "m"},
+            [48.5] * 25 + [51.0] * 15,
+            _check_cusum,
+            id="cusum",
+        ),
+        pytest.param(
+            adwin_monitor,
+            SCHEMA,
+            {"value_col": "m"},
+            _shift_series(25, 15, lo=0.05, hi=0.95),
+            _check_adwin,
+            id="adwin",
+        ),
+        pytest.param(
+            misra_gries_monitor,
+            MG_SCHEMA,
+            {"item_col": "item", "k": _MG_K},
+            ["a"] * 12 + ["b", "c", "d", "e"] * 4 + ["f"] * 12,
+            _check_mg,
+            id="misra_gries",
+        ),
+    ],
+)
+def test_multi_chunk_batch_sorts_across_chunks(
+    spark, tmp_path, monitor, schema, kwargs, xs, check
+):
+    # One key's micro-batch arriving as SEVERAL Arrow chunks (rows >
+    # arrow.maxRecordsPerBatch) must still be folded in ts order across
+    # chunk boundaries — a per-chunk sort folds in shuffle order.
+    # Shrink the Arrow batch size so a 40-row micro-batch spans >= 14
+    # chunks, feed the rows REVERSED, and require the unbroken reference
+    # on the ts-ordered series (each series folds differently reversed).
+    base = dt.datetime(2024, 1, 1)
+    rows = [("s", base + dt.timedelta(days=i), x) for i, x in enumerate(xs)]
+    rows.reverse()  # arrival order is the anti-sorted order
+    src = str(tmp_path / "src_chunks")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+
+    name = f"chunks_{monitor.__name__}"
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        stream = spark.readStream.schema(schema).parquet(src)
+        out = monitor(stream, key_col="series", ts_col="ts", **kwargs)
+        q = out.writeStream.format("memory").queryName(name).outputMode("update").start()
+        try:
+            q.processAllAvailable()
+            emitted = spark.sql(f"SELECT * FROM {name}").collect()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    assert len(emitted) == 1  # one file, one micro-batch, one key
+    check(emitted[0], xs)
