@@ -25,7 +25,6 @@ from kafka_etl_consumer_spark.operators.dedup import minhash_lsh_matches_against
 from kafka_etl_consumer_spark.operators.text import quality_score, unicode_clean
 from kafka_etl_consumer_spark.session import get_spark
 from kafka_etl_consumer_spark.sources.tables import load_table
-from kafka_etl_consumer_spark.streaming.metrics import IngestMetricsListener
 
 QUALITY_FLOOR = 0.2
 
@@ -76,8 +75,6 @@ def main() -> None:
             f"({n_in - n_novel} gated or duplicate)"
         )
 
-    metrics = IngestMetricsListener()
-    spark.streams.addListener(metrics)
     q = (
         spark.readStream.schema(schema).parquet(src)
         .writeStream.queryName("live-corpus").foreachBatch(on_batch)
@@ -96,10 +93,14 @@ def main() -> None:
     final = spark.read.parquet(corpus)
     print(f"landed corpus: {final.count()} documents "
           f"(from {docs.count()} arriving + seeded)")
-    print("per-batch metrics (listener):")
-    metrics.to_df(spark).select(
-        "batch_id", "num_input_rows", "rows_per_sec", "batch_duration_ms"
-    ).show(truncate=False)
+    # numInputRows counts source rows read by every job over the batch,
+    # so an unpersisted batch that on_batch scans n times reads n x its rows
+    print("per-batch metrics (query.recentProgress):")
+    for p in q.recentProgress:
+        if p.numInputRows:
+            print(f"  batch {p.batchId}: {p.numInputRows} source rows read, "
+                  f"{p.processedRowsPerSecond:.1f} rows/s, "
+                  f"{p.batchDuration} ms")
     spark.stop()
 
 

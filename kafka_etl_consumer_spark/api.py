@@ -21,11 +21,9 @@ Behavioral mapping, key by key:
 - ``checkpoint``       → NEW (no reference equivalent): checkpoint root.
   The reference tracks progress as Kafka offsets committed after flush
   (at-least-once, with its last-offset off-by-one duplicate,
-  ETLTask.java:269,359); here progress lives in the checkpoint. Delivery
-  is exactly-once for ``layout='hive'`` (file-sink ``_spark_metadata``)
-  and for ``layout='reference'`` with ``idempotent=True``; the plain
-  reference layout is at-least-once under crash-replay (exactly-once on
-  clean stop/start) — see streaming/ingest.py.
+  ETLTask.java:269,359); here progress lives in the checkpoint, and
+  delivery is exactly-once, crash-replay included — see
+  streaming/ingest.py.
 
 ``kafkaConsumerProps``: ``bootstrap.servers`` feeds the source; everything
 else passes through with the ``kafka.`` prefix. ``enable.auto.commit`` is
@@ -96,10 +94,9 @@ class KafkaETLParquetConsumer:
     def _source(self) -> DataFrame:
         if self._source_df is not None:
             return self._source_df
-        servers = self.kafka_props.pop("bootstrap.servers")
-        return kafka_source(
-            self.spark, servers, self.topics, consumer_options=self.kafka_props
-        )
+        options = dict(self.kafka_props)
+        servers = options.pop("bootstrap.servers")
+        return kafka_source(self.spark, servers, self.topics, consumer_options=options)
 
     def run(self) -> list[StreamingQuery]:
         """Start the pipeline (reference blocks forever in the poll loop,

@@ -17,14 +17,14 @@ Reference semantics being reproduced (SURVEY.md §2.1):
          (KafkaETLParquetConsumer.java:33-42, ETLTask.java:121-137)
          → ``trigger(processingTime=...)``: one micro-batch == one roll
 - C1/C2  offset tracking + flush-then-commit at-least-once
-         (ETLTask.java:332-382) → checkpointLocation per query. Delivery:
-         ``layout='hive'`` is exactly-once (file sink + ``_spark_metadata``
-         commit log); ``layout='reference'`` is at-least-once under
-         crash-replay (exactly-once on clean stop/start, or always with
-         ``idempotent=True``'s bid-keyed overwrite). All modes beat the
-         reference's systematic 1-record-per-partition duplicate on every
-         restart (it commits the last *processed* offset,
-         ETLTask.java:269,359): documented here, not replicated.
+         (ETLTask.java:332-382) → checkpointLocation per query. Delivery
+         is exactly-once for both layouts, crash-replay included:
+         ``layout='hive'`` through the file sink's ``_spark_metadata``
+         commit log, ``layout='reference'`` through a batch-id-keyed
+         land step (see ``_reference_layout_writer``). Both beat the
+         reference's at-least-once, with its 1-record-per-partition
+         duplicate on every restart (it commits the last *processed*
+         offset, ETLTask.java:269,359): documented here, not replicated.
 - K5     filename collision loop (ETLTask.java:221-231) → unnecessary:
          Spark task files are UUID-unique.
 
@@ -265,7 +265,6 @@ def ingest(
     layout: str = "reference",
     mode: str = "FAILFAST",
     event_time_col: str | Column | None = None,
-    idempotent: bool = False,
     reader_registry: SchemaRegistry | None = None,
 ) -> list[StreamingQuery]:
     """Start one streaming query per topic: filter → Avro-decode →
@@ -284,15 +283,18 @@ def ingest(
     ``layout``:
     - ``"reference"`` — foreachBatch writes
       ``<out>/<topic>/<date_format(now)>/part-*.parquet``: byte-for-byte
-      the reference's directory contract (README.md:14-26 of the reference).
-      At-least-once under crash-replay; pass ``idempotent=True`` for
-      exactly-once via bid-keyed overwrite (see _reference_layout_writer).
+      the reference's directory contract (README.md:14-26 of the reference),
+      each file named ``part-b<batch_id>-*`` so a replayed batch replaces
+      its own files (see _reference_layout_writer).
     - ``"hive"`` — ``partitionBy(dt0, dt1, ...)`` key=value directories:
       partition-prunable by Spark/Hive/Trino readers; preferred for new
       deployments. With ``event_time_col`` (a decoded column name, e.g. an
       epoch-millis field via ``timestamp_millis``), partitions derive from
       EVENT time instead of processing time — late rows land in their
       correct partition (partition_columns docstring has the trade-off).
+
+    Delivery is exactly-once for both layouts, also when a crash between
+    the write and the checkpoint's commit makes Spark replay a batch.
 
     ``reader_registry``: per-topic READER schemas for rolling upgrades —
     payloads decode with the writer schema from ``registry`` under the
@@ -327,9 +329,7 @@ def ingest(
         else:
             q = (
                 branch.writeStream.foreachBatch(
-                    _reference_layout_writer(
-                        sink_path, date_format, avsc, mode, reader, idempotent
-                    )
+                    _reference_layout_writer(sink_path, date_format, avsc, mode, reader)
                 )
                 .option("checkpointLocation", ckpt)
                 .trigger(processingTime=trigger)
@@ -372,7 +372,6 @@ def _reference_layout_writer(
     avsc: str,
     mode: str = "FAILFAST",
     reader_avsc: str | None = None,
-    idempotent: bool = False,
 ):
     """foreachBatch sink reproducing ``<out>/<topic>/<SimpleDateFormat(now)>/``.
 
@@ -387,21 +386,23 @@ def _reference_layout_writer(
     UTC), through the session's JVM — the exact analogue of the reference
     freezing it at writer-open time (ETLTask.java:164-167).
 
-    Delivery semantics (C1/C2):
-    - ``idempotent=False`` (byte-exact reference layout): **at-least-once
-      under crash-replay** — a batch that dies after a partial append is
-      replayed on restart and re-appended, possibly into a different
-      minute directory. Clean stop/start is exactly-once (checkpoint holds
-      the committed offsets). This still beats the reference, which
-      duplicates one record per partition on EVERY restart
-      (ETLTask.java:269,359).
-    - ``idempotent=True``: exactly-once. Each batch writes to
-      ``<date>/bid=<batch_id>/`` with ``mode=overwrite``, and the batch's
-      date string is pinned in a ``_batch_index`` sidecar BEFORE data is
-      written, so a replay resolves the SAME directory and the overwrite
-      erases any partial files from the failed attempt. Costs one extra
-      directory level (readers use recursiveFileLookup or partition-style
-      globs, as they already must for ``<date>/<HH>/<mm>``).
+    Delivery (C1/C2) is exactly-once, crash-replay included. A restart
+    replays only the last uncommitted batch, with the same ``batch_id``
+    and rows, and every step below can be rerun:
+
+    1. pin the batch's date in ``_batch_index/<batch_id>__<date, / as ~>``
+       before any data is written, so a replay lands in the SAME
+       directory, and delete the older markers, which no replay can need;
+    2. write the decoded rows into a cleared ``_staging/`` directory;
+    3. delete any ``<date>/part-b<batch_id>-*`` a failed attempt left,
+       rename each staged ``part-*`` to ``<date>/part-b<batch_id>-*``,
+       and remove ``_staging/``.
+
+    Spark's readers skip ``_``-prefixed paths, so neither sidecar shows
+    in a read of ``<out>/<topic>``. The markers belong to one checkpoint:
+    reset the checkpoint and the sink directory together. All file
+    operations go through the Hadoop FS API, so any scheme (file://,
+    hdfs://, s3a://) works, not just the local fs.
     """
     def format_now(spark: SparkSession) -> str:
         jvm = spark._jvm
@@ -413,36 +414,39 @@ def _reference_layout_writer(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        decoded = decode_avro(batch_df, avsc, mode=mode, reader_avsc=reader_avsc)
-        if not idempotent:
-            date_str = format_now(spark)
-            decoded.write.mode("append").option("compression", "snappy").parquet(
-                f"{sink_path}/{date_str}"
-            )
-            return
-
-        # exactly-once: pin this batch's date dir (write-once marker named
-        # <id>__<date with / as ~>), then overwrite a bid-keyed directory —
-        # both steps are replay-idempotent. Hadoop FS API so any scheme
-        # (file://, hdfs://, s3a://) works, not just the local fs.
         fs, jvm = _fs(spark, sink_path)
-        index = _jpath(jvm, f"{sink_path}/_batch_index")
-        fs.mkdirs(index)
-        prefix = f"{batch_id}__"
-        existing = [
-            st.getPath().getName()
-            for st in fs.listStatus(index)
-            if st.getPath().getName().startswith(prefix)
-        ]
-        if existing:
-            date_str = existing[0][len(prefix):].replace("~", "/")
+        # resolve the class once: each package segment costs a py4j call
+        hadoop_path = jvm.org.apache.hadoop.fs.Path
+
+        def path(rel: str):
+            return hadoop_path(f"{sink_path}/{rel}")
+
+        fs.mkdirs(path("_batch_index"))
+        pin = f"{batch_id}__"
+        markers = [st.getPath().getName() for st in fs.listStatus(path("_batch_index"))]
+        pinned = [m for m in markers if m.startswith(pin)]
+        if pinned:
+            date_str = pinned[0][len(pin):].replace("~", "/")
         else:
             date_str = format_now(spark)
-            marker = _jpath(jvm, f"{sink_path}/_batch_index/{prefix}{date_str.replace('/', '~')}")
-            fs.create(marker, True).close()
-        decoded.write.mode("overwrite").option("compression", "snappy").parquet(
-            f"{sink_path}/{date_str}/bid={batch_id}"
-        )
+            fs.create(path(f"_batch_index/{pin}{date_str.replace('/', '~')}"), True).close()
+        for m in markers:
+            if not m.startswith(pin):
+                fs.delete(path(f"_batch_index/{m}"), False)
+
+        fs.delete(path("_staging"), True)
+        decode_avro(batch_df, avsc, mode=mode, reader_avsc=reader_avsc).write.mode(
+            "append"
+        ).option("compression", "snappy").parquet(f"{sink_path}/_staging")
+
+        for st in fs.globStatus(path(f"{date_str}/part-b{batch_id}-*")) or []:
+            fs.delete(st.getPath(), False)
+        fs.mkdirs(path(date_str))
+        for st in fs.globStatus(path("_staging/part-*")):
+            name = f"{date_str}/part-b{batch_id}-{st.getPath().getName()[len('part-'):]}"
+            if not fs.rename(st.getPath(), path(name)):
+                raise OSError(f"could not move {st.getPath()} to {sink_path}/{name}")
+        fs.delete(path("_staging"), True)
 
     return write_batch
 

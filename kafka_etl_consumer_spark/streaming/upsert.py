@@ -15,8 +15,8 @@ re-run NEVER overwrites the directory the in-flight merge plan is
 reading) and a marker file records the active version. The merge
 itself is deterministic, so a replayed batch (checkpoint says it ran,
 output didn't commit) converges to byte-identical state (exactly-once
-OBSERVABLE state, the same posture as ingest's idempotent reference
-layout). Readers resolve the marker, never a half-written directory.
+OBSERVABLE state, the same posture as ingest's reference-layout
+writer). Readers resolve the marker, never a half-written directory.
 The marker stores the full committed LINEAGE (active version first,
 then the ``retain_versions`` previously committed ones); after each
 repoint, every ``_v*`` directory outside the lineage is

@@ -82,3 +82,28 @@ def test_facade_requires_output(spark):
         KafkaETLParquetConsumer(
             {"bootstrap.servers": "x"}, ["t"], 1000, {}, DictSchemaRegistry({}), spark=spark
         )
+
+
+def test_facade_source_survives_restart(spark, tmp_path, monkeypatch):
+    """``run()`` after ``stop()`` builds the Kafka source again from the
+    same consumer props: building it must not consume them."""
+    from kafka_etl_consumer_spark import api
+
+    calls = []
+    monkeypatch.setattr(
+        api, "kafka_source",
+        lambda spark, servers, topics, consumer_options: calls.append(
+            (servers, topics, dict(consumer_options))
+        ),
+    )
+    props = {"bootstrap.servers": "localhost:9092", "group.id": "etl",
+             "enable.auto.commit": "true"}
+    consumer = KafkaETLParquetConsumer(
+        props, ["t"], 1000, {"output": str(tmp_path / "out")},
+        DictSchemaRegistry({}), spark=spark,
+    )
+    consumer._source()
+    consumer._source()
+    assert calls == [("localhost:9092", ["t"], {"group.id": "etl"})] * 2
+    assert consumer.kafka_props == {"bootstrap.servers": "localhost:9092", "group.id": "etl"}
+    assert props["enable.auto.commit"] == "true"  # the caller's dict is not touched

@@ -10,6 +10,9 @@ decode→partition→write path runs exactly as it would off Kafka.
 from __future__ import annotations
 
 import glob
+import os
+import re
+import shutil
 import time
 
 import pytest
@@ -25,11 +28,10 @@ from kafka_etl_consumer_spark.fixtures import (
 )
 from kafka_etl_consumer_spark.schema.registry import DictSchemaRegistry
 from kafka_etl_consumer_spark.streaming.ingest import (
-    IntervalUnit,
+    _reference_layout_writer,
     decode_avro,
     encode_avro,
     ingest,
-    rolling_trigger,
 )
 
 ENVELOPE = T.StructType(
@@ -44,6 +46,18 @@ def _encoded_events_df(spark, n=10):
         for r in item_view_events(n)
     ]
     return spark.createDataFrame(rows, ENVELOPE)
+
+
+# a landed file of the reference layout: <topic>/<yyyy-MM-dd/HH/mm>/part-*
+LANDED_RE = re.compile(r"^\d{4}-\d{2}-\d{2}/\d{2}/\d{2}/part-[^/]+\.parquet$")
+
+
+def _landed(sink):
+    """Every ``.parquet`` file under ``sink``, relative to it."""
+    return [
+        os.path.relpath(f, sink)
+        for f in glob.glob(f"{sink}/**/*.parquet", recursive=True)
+    ]
 
 
 def test_decode_avro_batch(spark):
@@ -85,7 +99,6 @@ def test_encode_decode_roundtrip_df(spark):
     assert a == b
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("layout", ["reference", "hive"])
 def test_ingest_streaming_roundtrip(spark, tmp_path, layout):
     # Stage encoded payloads as parquet for a file stream — same (topic,
@@ -103,7 +116,7 @@ def test_ingest_streaming_roundtrip(spark, tmp_path, layout):
         out_dir,
         topics=[ITEM_VIEW_EVENT_TOPIC],
         checkpoint_path=ckpt_dir,
-        trigger=rolling_trigger(IntervalUnit.MINUTE, 1),
+        trigger="1 second",
         layout=layout,
     )
     try:
@@ -143,7 +156,6 @@ def test_ingest_streaming_roundtrip(spark, tmp_path, layout):
     assert got == want
 
 
-@pytest.mark.slow
 def test_ingest_event_time_partitioning(spark, tmp_path):
     """hive layout + event_time_col: directories derive from the EVENT's
     own timestamp (fixtures pin baseProperties.timestamp), not wall clock —
@@ -161,6 +173,7 @@ def test_ingest_event_time_partitioning(spark, tmp_path):
         out_dir,
         topics=[ITEM_VIEW_EVENT_TOPIC],
         checkpoint_path=ckpt_dir,
+        trigger="1 second",
         layout="hive",
         date_format="yyyy-MM-dd/HH",
         event_time_col=F.timestamp_millis(F.col("baseProperties.timestamp")),
@@ -359,27 +372,24 @@ def test_reader_schema_evolution(spark):
 def test_reference_layout_idempotent_replay(spark, tmp_path):
     """Chaos-replay parity (VERDICT r1 item 6): after a crash mid-batch,
     Structured Streaming re-invokes foreachBatch with the SAME batch_id.
-    With idempotent=True the replay must overwrite the bid-keyed directory
-    pinned by the _batch_index marker — partial files from the failed
+    The replay must land in the date directory pinned by the
+    _batch_index marker and replace the batch's own ``part-b<id>-*``
+    files: a partial file and a staging directory left by the failed
     attempt disappear and the row set equals the batch exactly once."""
-    from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
-
     sink = str(tmp_path / "sink")
-    writer = _reference_layout_writer(
-        sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC, idempotent=True
-    )
+    writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
     batch = _encoded_events_df(spark, 5)
 
     writer(batch, 0)
-    files_first = set(glob.glob(f"{sink}/**/*.parquet", recursive=True))
+    files_first = _landed(sink)
     assert files_first, "first attempt wrote nothing"
 
-    # simulate a partial leftover from a crashed attempt, then the replay
-    bid_dir = next(iter(files_first)).rsplit("/", 1)[0]
-    (tmp_path / "garbage").write_bytes(b"not parquet")
-    import shutil
-
-    shutil.copy(tmp_path / "garbage", f"{bid_dir}/part-leftover.parquet.tmp")
+    # simulate what a crashed attempt leaves, then the replay
+    date_dir = os.path.dirname(files_first[0])
+    batch.limit(2).write.parquet(str(tmp_path / "partial"))
+    partial = glob.glob(f"{tmp_path}/partial/part-*.parquet")[0]
+    shutil.copy(partial, f"{sink}/{date_dir}/part-b0-leftover.parquet")
+    shutil.copytree(tmp_path / "partial", f"{sink}/_staging")
     writer(batch, 0)
 
     back = spark.read.option("recursiveFileLookup", "true").parquet(sink)
@@ -392,31 +402,45 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
     assert {r.uid for r in back.select("baseProperties.uid").collect()} == {
         e["baseProperties"]["uid"] for e in item_view_events(5)
     }
-    assert not glob.glob(f"{sink}/**/part-leftover*", recursive=True)
-    # marker pinned one date dir: replay reused it (no second date dir)
-    import os
+    assert not glob.glob(f"{sink}/**/part-b0-leftover*", recursive=True)
+    assert not os.path.exists(f"{sink}/_staging")
+    # every file directly under the pinned date dir: replay reused it
+    landed = _landed(sink)
+    assert landed and all(LANDED_RE.match(f) for f in landed), landed
+    assert {os.path.dirname(f) for f in landed} == {date_dir}
 
-    date_dirs = {
-        os.path.relpath(p, sink).split("/bid=")[0]
-        for p in glob.glob(f"{sink}/*/*/*/bid=*", recursive=False)
+
+def test_reference_layout_keeps_one_batch_marker(spark, tmp_path):
+    """Only the last batch can be replayed, so after three batches
+    ``_batch_index/`` holds the last batch's marker alone, and no
+    ``.parquet`` file is left outside ``<date>/``."""
+    sink = str(tmp_path / "sink")
+    writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
+    batch = _encoded_events_df(spark, 3)
+    for batch_id in range(3):
+        writer(batch, batch_id)
+
+    markers = [m for m in os.listdir(f"{sink}/_batch_index") if not m.startswith(".")]
+    assert len(markers) == 1 and markers[0].startswith("2__"), markers
+    landed = _landed(sink)
+    assert landed and all(LANDED_RE.match(f) for f in landed), landed
+    assert {os.path.basename(f)[: len("part-b0-")] for f in landed} == {
+        f"part-b{i}-" for i in range(3)
     }
-    assert len(date_dirs) == 1
+    back = spark.read.option("recursiveFileLookup", "true").parquet(sink)
+    assert back.count() == 9
 
 
-@pytest.mark.parametrize("idempotent", [False, True])
-def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch, idempotent):
+def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch):
     """K4: a micro-batch with no rows for the topic opens no directory and
     never builds the decode — emptiness is tested on the raw rows."""
-    import os
     import sys
 
     ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
     calls = []
     monkeypatch.setattr(ing, "decode_avro", lambda *a, **k: calls.append(a))
     sink = str(tmp_path / "sink")
-    writer = ing._reference_layout_writer(
-        sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC, idempotent=idempotent
-    )
+    writer = ing._reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
     raw = _encoded_events_df(spark, 3).filter(F.col("topic") == "other-topic")
 
     writer(raw, 0)
@@ -428,8 +452,6 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
     """The writer decodes under the query's mode: FAILFAST fails the batch
     (the reference's crash, AbstractAvroDeserializeService.java:56-59),
     PERMISSIVE lands the corrupt payload as an all-null row."""
-    from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
-
     raw = spark.createDataFrame(
         [
             Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(b"\x07broken")),
@@ -451,21 +473,17 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
     assert sorted(r.itemId for r in rows if r.itemId) == ["any-item-id0", "any-item-id1"]
 
 
-@pytest.mark.parametrize("idempotent", [False, True])
-def test_reference_layout_date_format_every_letter(spark, tmp_path, idempotent):
+def test_reference_layout_date_format_every_letter(spark, tmp_path):
     """The batch directory is the reference's SimpleDateFormat of the batch
     time in UTC: every pattern letter is formatted (``ss`` included), none
     lands as literal text."""
     import datetime as dt
-    import os
-
-    from kafka_etl_consumer_spark.streaming.ingest import _reference_layout_writer
 
     sink = str(tmp_path / "sink")
     before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None, microsecond=0)
-    _reference_layout_writer(
-        sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC, idempotent=idempotent
-    )(_encoded_events_df(spark, 2), 0)
+    _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC)(
+        _encoded_events_df(spark, 2), 0
+    )
     after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     dirs = {
         os.path.relpath(os.path.dirname(f), sink)
@@ -473,9 +491,6 @@ def test_reference_layout_date_format_every_letter(spark, tmp_path, idempotent):
     }
     assert len(dirs) == 1
     date_dir = dirs.pop()
-    if idempotent:
-        date_dir, bid = date_dir.rsplit("/", 1)
-        assert bid == "bid=0"
     assert before <= dt.datetime.strptime(date_dir, "%Y-%m-%d/%H/%M/%S") <= after
     back = spark.read.parquet(f"{sink}/{date_dir}")
     assert sorted(r.itemId for r in back.collect()) == ["any-item-id0", "any-item-id1"]
@@ -515,7 +530,9 @@ def test_decode_avro_reader_equal_to_writer_multibranch_union(spark):
 
 
 def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
-    """End-to-end idempotent reference layout across a stop/restart."""
+    """End-to-end reference layout across a stop/restart: no duplicates,
+    every file directly under its date directory, no staging directory
+    left, and one batch marker."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
 
@@ -533,7 +550,6 @@ def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
             out,
             topics=[ITEM_VIEW_EVENT_TOPIC],
             checkpoint_path=ckpt,
-            idempotent=True,
             trigger="1 second",
         )
         try:
@@ -554,18 +570,23 @@ def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
     )
     got = sorted(r.itemId for r in back.select("itemId").collect())
     assert got == sorted(e["itemId"] for e in all_events)
+    sink = f"{out}/{ITEM_VIEW_EVENT_TOPIC}"
+    assert all(LANDED_RE.match(f) for f in _landed(sink)), _landed(sink)
+    assert not os.path.exists(f"{sink}/_staging")
+    assert len([m for m in os.listdir(f"{sink}/_batch_index") if not m.startswith(".")]) == 1
 
-@pytest.mark.slow
-def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path):
+
+@pytest.mark.parametrize("layout", ["hive", "reference"])
+def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path, layout):
     """Chaos: crash in the window between the offsets write and the commit
     write (the classic failure slot — C1/C2, ETLTask.java:269,359 of the
     reference). Simulated by deleting the newest ``commits/`` marker after a
     clean run; on restart Spark re-executes that batch. The hive layout's
-    file sink logs committed files in ``_spark_metadata``, so the replay is
-    invisible-or-idempotent and the read-back row set still equals a BATCH
-    decode of the same source — the oracle the streaming path must match."""
-    import os
-
+    file sink logs committed files in ``_spark_metadata``; the reference
+    layout's replay lands in the pinned date directory and replaces its own
+    ``part-b<id>-*`` files. Either way the replay is invisible-or-idempotent
+    and the read-back row set still equals a BATCH decode of the same
+    source — the oracle the streaming path must match."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
 
@@ -583,7 +604,8 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path):
             out,
             topics=[ITEM_VIEW_EVENT_TOPIC],
             checkpoint_path=ckpt,
-            layout="hive",
+            trigger="1 second",
+            layout=layout,
         )
         try:
             for q in qs:
@@ -619,7 +641,10 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path):
     stage(all_events[6:])
     run_once()
 
-    back = spark.read.parquet(f"{out}/{ITEM_VIEW_EVENT_TOPIC}")
+    reader = spark.read
+    if layout == "reference":  # plain date dirs, not key=value partitions
+        reader = reader.option("recursiveFileLookup", "true")
+    back = reader.parquet(f"{out}/{ITEM_VIEW_EVENT_TOPIC}")
     oracle = decode_avro(
         spark.read.parquet(src).filter(F.col("topic") == ITEM_VIEW_EVENT_TOPIC),
         ITEM_VIEW_EVENT_AVSC,
@@ -812,7 +837,6 @@ def test_reader_schema_promotion_through_dataframe(spark):
     ]
 
 
-@pytest.mark.slow
 def test_ingest_with_reader_registry_evolves_schema(spark, tmp_path):
     """End-to-end rolling upgrade through the ingest pipeline: producers
     keep writing schema v1 payloads while the landed parquet carries the
@@ -850,7 +874,7 @@ def test_ingest_with_reader_registry_evolves_schema(spark, tmp_path):
         out_dir,
         topics=[topic],
         checkpoint_path=ckpt_dir,
-        trigger=rolling_trigger(IntervalUnit.MINUTE, 1),
+        trigger="1 second",
         reader_registry=DictSchemaRegistry({topic: v2}),
     )
     try:
