@@ -431,9 +431,12 @@ def test_reference_layout_keeps_one_batch_marker(spark, tmp_path):
     assert back.count() == 9
 
 
-def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("replay", [False, True])
+def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch, replay):
     """K4: a micro-batch with no rows for the topic opens no directory and
-    never builds the decode — emptiness is tested on the raw rows."""
+    never builds the decode — emptiness is tested on the raw rows. A
+    replay of the empty batch (same ``batch_id``) writes nothing either,
+    not even a ``_batch_index`` marker."""
     import sys
 
     ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
@@ -444,6 +447,8 @@ def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatc
     raw = _encoded_events_df(spark, 3).filter(F.col("topic") == "other-topic")
 
     writer(raw, 0)
+    if replay:
+        writer(raw, 0)
     assert not calls
     assert not os.path.exists(sink)
 
@@ -473,18 +478,24 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
     assert sorted(r.itemId for r in rows if r.itemId) == ["any-item-id0", "any-item-id1"]
 
 
-def test_reference_layout_date_format_every_letter(spark, tmp_path):
+@pytest.mark.parametrize("replay", [False, True])
+def test_reference_layout_date_format_every_letter(spark, tmp_path, replay):
     """The batch directory is the reference's SimpleDateFormat of the batch
     time in UTC: every pattern letter is formatted (``ss`` included), none
-    lands as literal text."""
+    lands as literal text. A replay of the batch (same ``batch_id``, a
+    second or more later) reuses the pinned directory and lands the rows
+    once."""
     import datetime as dt
 
     sink = str(tmp_path / "sink")
+    writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC)
+    batch = _encoded_events_df(spark, 2)
     before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None, microsecond=0)
-    _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC)(
-        _encoded_events_df(spark, 2), 0
-    )
+    writer(batch, 0)
     after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    if replay:
+        time.sleep(1.1)  # the ``ss`` of a fresh format would differ
+        writer(batch, 0)
     dirs = {
         os.path.relpath(os.path.dirname(f), sink)
         for f in glob.glob(f"{sink}/**/*.parquet", recursive=True)
