@@ -45,9 +45,18 @@ def main() -> None:
     schema = docs.schema
 
     def on_batch(batch, batch_id):
-        if batch.isEmpty():
-            return
+        # every step below is its own action over the batch: persist it so
+        # the source is read once per batch, not once per action
+        batch.persist()
+        try:
+            land(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    def land(batch, batch_id):
         n_in = batch.count()
+        if n_in == 0:
+            return
         # 1. hygiene: NFC + control strip + whitespace collapse
         cleaned = (
             unicode_clean(batch, "text")
@@ -93,8 +102,8 @@ def main() -> None:
     final = spark.read.parquet(corpus)
     print(f"landed corpus: {final.count()} documents "
           f"(from {docs.count()} arriving + seeded)")
-    # numInputRows counts source rows read by every job over the batch,
-    # so an unpersisted batch that on_batch scans n times reads n x its rows
+    # numInputRows counts source rows read by every job over the batch;
+    # with the batch persisted it equals the batch's documents
     print("per-batch metrics (query.recentProgress):")
     for p in q.recentProgress:
         if p.numInputRows:

@@ -5,12 +5,27 @@ ETLTask.java:197 in the reference); our analytics surface reads the landed
 tables back with ``spark.read.parquet`` so every downstream query benefits
 from Parquet predicate pushdown, column pruning, and (when the layout has
 them) partition pruning — all free from Catalyst.
+
+Each session caches every table's inferred Parquet schema (the
+``StructType``, nothing else), so only the first ``load_table`` of a table
+runs Spark's schema-inference job; later loads hand the schema to the
+reader and build their plan without any job. An entry is keyed by the
+table path and a stamp read through the Hadoop FileSystem API
+(modification time, content length and file count), so a rewrite at the
+same path is seen on the next load, on any scheme the read accepts. No
+DataFrame is cached (its file index would go stale) and no data is
+``.cache()``d: that changes scan partitioning, and with it the order of
+floating-point sums that queries round and compare against their oracles.
 """
 
 from __future__ import annotations
 
+import weakref
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -38,6 +53,12 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 # DuckDB's CAST(ts AS TIMESTAMP) applies, so oracle comparisons line up.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
+# session -> {path: (stamp, inferred schema)}; weak, so a session's cache
+# goes with it. Two threads racing on one path at worst infer it twice.
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple[int, int, int], StructType]]
+] = weakref.WeakKeyDictionary()
+
 
 def table_path(sf_dir: str, name: str) -> str:
     """Storage path of one synthetic table (TESTDATA.md layout). The single
@@ -48,12 +69,47 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def _stamp(spark: SparkSession, path: str) -> tuple[int, int, int]:
+    """(modification time, content length, file count) of a file or
+    directory, through the Hadoop FileSystem of the path's scheme."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    summary = fs.getContentSummary(jpath)
+    return (
+        fs.getFileStatus(jpath).getModificationTime(),
+        summary.getLength(),
+        summary.getFileCount(),
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when this
+    session has not seen ``path`` with its current stamp. Only the schema
+    is reused: a cached DataFrame would keep a stale file index."""
+    try:
+        stamp = _stamp(spark, path)
+    except Py4JJavaError:  # e.g. no such path: let the read raise Spark's error
+        return spark.read.parquet(path)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    hit = schemas.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[path] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table from ``sf_dir`` (TESTDATA.md layout)."""
-    if name not in TABLES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    """Load one synthetic table from ``sf_dir`` (TESTDATA.md layout).
+
+    The first load of a table in a session infers its Parquet schema (one
+    Spark job); later loads reuse that schema while the table's stamp
+    (path, modification time, content length, file count) is unchanged,
+    and start no job. Nothing but the schema is cached."""
+    path = table_path(sf_dir, name)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, path)
     for col in _NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
