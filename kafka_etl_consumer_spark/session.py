@@ -11,6 +11,16 @@ Python-side exchange.
 Everything here is safe on ``local[N]`` and intended for a 1000-executor
 cluster: nothing pins partition counts to the local core count except the
 default shuffle parallelism, which AQE re-plans at runtime anyway.
+
+Python workers start from ``worker_daemon`` (``spark.python.daemon.module``)
+instead of ``pyspark.daemon``. Every Python task calls
+``importlib.invalidate_caches()``, and before CPython 3.13 each zipimporter
+then re-reads its whole archive (pyspark.zip, py4j, the spark-core jar):
+165-260 ms of every task on 3.11, more than a micro-batch's Avro decode.
+The daemon skips the re-read while an archive is unchanged. It can go when
+the workers run CPython 3.13 or later, whose ``invalidate_caches`` only
+drops the cached directory. Executors must be able to import this package
+where their Python daemon starts (``decode_avro``'s closures need that too).
 """
 
 from __future__ import annotations
@@ -88,6 +98,7 @@ def get_spark(
         # --- Python exchange is Arrow-batched everywhere ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.daemon.module", "kafka_etl_consumer_spark.worker_daemon")
         # --- Parquet posture mirroring the reference (ETLTask.java:146-148) ---
         .config("spark.hadoop.parquet.block.size", str(256 * 1024 * 1024))
         .config("spark.hadoop.parquet.page.size", str(64 * 1024))

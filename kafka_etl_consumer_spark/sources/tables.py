@@ -46,11 +46,16 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
 
-# Columns stored as TIMESTAMP(NANOS) in the parquet footer. Spark has no
-# nanosecond timestamp type (SPARK-40819): it either rejects the file or,
-# with spark.sql.legacy.parquet.nanosAsLong, surfaces the raw int64. We opt
-# into the long and floor-divide to microseconds — the same truncation
-# DuckDB's CAST(ts AS TIMESTAMP) applies, so oracle comparisons line up.
+# Columns that may be stored as TIMESTAMP(NANOS) in the parquet footer, as
+# pyarrow writes a ``timestamp("ns")`` column. Spark has no nanosecond
+# timestamp type (SPARK-40819): it either rejects the file or, with
+# spark.sql.legacy.parquet.nanosAsLong, surfaces the raw int64. We opt into
+# the long and floor-divide to microseconds — the same truncation DuckDB's
+# CAST(ts AS TIMESTAMP) applies, so oracle comparisons line up. Only such
+# files take this branch: the synthetic tables at sf0.001/0.01/0.1 store
+# ``events.ts`` as zoneless ``timestamp[us]``, which loads as
+# ``timestamp_ntz``, and a Spark-written ``events`` (perfbench's) loads as
+# ``timestamp``.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
 # session -> {path: (stamp, inferred schema)}; weak, so a session's cache

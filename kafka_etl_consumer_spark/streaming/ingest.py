@@ -404,19 +404,20 @@ def _reference_layout_writer(
     operations go through the Hadoop FS API, so any scheme (file://,
     hdfs://, s3a://) works, not just the local fs.
     """
-    def format_now(spark: SparkSession) -> str:
-        jvm = spark._jvm
-        fmt = jvm.java.text.SimpleDateFormat(date_format)
-        fmt.setTimeZone(jvm.java.util.TimeZone.getTimeZone("UTC"))
-        return fmt.format(jvm.java.util.Date())
+    # (FileSystem, Path class, UTC formatter, Date class), resolved on the
+    # first non-empty batch: each package segment costs a py4j call. The
+    # query runs its batches one after another, so one formatter is safe.
+    handles: list = []
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        fs, jvm = _fs(spark, sink_path)
-        # resolve the class once: each package segment costs a py4j call
-        hadoop_path = jvm.org.apache.hadoop.fs.Path
+        if not handles:
+            fs, jvm = _fs(batch_df.sparkSession, sink_path)
+            fmt = jvm.java.text.SimpleDateFormat(date_format)
+            fmt.setTimeZone(jvm.java.util.TimeZone.getTimeZone("UTC"))
+            handles.extend((fs, jvm.org.apache.hadoop.fs.Path, fmt, jvm.java.util.Date))
+        fs, hadoop_path, fmt, java_date = handles
 
         def path(rel: str):
             return hadoop_path(f"{sink_path}/{rel}")
@@ -428,7 +429,7 @@ def _reference_layout_writer(
         if pinned:
             date_str = pinned[0][len(pin):].replace("~", "/")
         else:
-            date_str = format_now(spark)
+            date_str = fmt.format(java_date())
             fs.create(path(f"_batch_index/{pin}{date_str.replace('/', '~')}"), True).close()
         for m in markers:
             if not m.startswith(pin):
