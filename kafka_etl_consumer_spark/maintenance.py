@@ -433,17 +433,13 @@ def forget_keys(
         # retried after commit begins would find its input gone. The
         # checkpoint is bounded by the dirty partitions, not the table.
         cleaned = cleaned.localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                cleaned.write.mode("overwrite")
-                .partitionBy(partition_col)
-                .option("compression", "snappy")
-                .parquet(table_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            cleaned.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .option("compression", "snappy")
+            .parquet(table_path)
+        )
         # in-place partition overwrite on a streaming-written table makes
         # the sink log stale — drop it (same contract as backfill_decoded)
         drop_stream_sink_log(spark, table_path)

@@ -9,8 +9,8 @@ Reference semantics being reproduced (SURVEY.md §2.1):
          Like the reference, each message is decoded once, on its way to
          the writer:
          inside the ``foreachBatch`` writer for ``layout='reference'``
-         (after a raw-row emptiness test), in the streaming plan for
-         ``layout='hive'``
+         (after a one-row read of the batch time), in the streaming plan
+         for ``layout='hive'``
 - K1/K2  Snappy Parquet sink in date-formatted directories
          ``<out>/<topic>/<yyyy-MM-dd/HH/mm>/...`` (ETLTask.java:197,213-219)
 - K3     processing-time rolling interval DAY/HOUR/MINUTE × N
@@ -54,6 +54,12 @@ from kafka_etl_consumer_spark.avro_codec import (
 )
 from kafka_etl_consumer_spark.maintenance import _fs, _jpath
 from kafka_etl_consumer_spark.schema.registry import SchemaRegistry
+
+
+# The batch time (epoch millis) the reference-layout writer formats into the
+# date directory: Spark fixes ``current_timestamp()`` per batch in the offset
+# log, so a replayed batch gets the same value.
+_BATCH_TIME_COL = "_batch_time_ms"
 
 
 class IntervalUnit(enum.Enum):
@@ -159,7 +165,7 @@ def decode_avro(
             [T.StructField(f.name, _fully_nullable(f.dataType), True) for f in struct_schema.fields]
         )
     out_schema = T.StructType(
-        [next(f for f in df.schema.fields if f.name == c) for c in keep]
+        [df.schema[c] for c in keep]
         + ([T.StructField(corrupt_col, T.BinaryType())] if corrupt_col else [])
         + list(struct_schema.fields)
     )
@@ -270,9 +276,9 @@ def ingest(
     """Start one streaming query per topic: filter → Avro-decode →
     date-partitioned Snappy Parquet under ``<output_path>/<topic>/...``.
     Each message is decoded once: for ``"reference"`` the query carries the
-    topic's raw ``(topic, value)`` rows and the ``foreachBatch`` writer
-    tests them for emptiness and decodes only a non-empty batch; for
-    ``"hive"`` the decode is part of the streaming plan.
+    topic's raw ``value`` bytes plus the batch time, and the
+    ``foreachBatch`` writer decodes only a non-empty batch; for ``"hive"``
+    the decode is part of the streaming plan.
 
     ``source_df`` must expose Kafka-source-shaped columns ``topic`` (string)
     and ``value`` (binary) — in production from
@@ -282,7 +288,7 @@ def ingest(
 
     ``layout``:
     - ``"reference"`` — foreachBatch writes
-      ``<out>/<topic>/<date_format(now)>/part-*.parquet``: byte-for-byte
+      ``<out>/<topic>/<date_format(batch time)>/part-*.parquet``: byte-for-byte
       the reference's directory contract (README.md:14-26 of the reference),
       each file named ``part-b<batch_id>-*`` so a replayed batch replaces
       its own files (see _reference_layout_writer).
@@ -293,8 +299,10 @@ def ingest(
       EVENT time instead of processing time — late rows land in their
       correct partition (partition_columns docstring has the trade-off).
 
-    Delivery is exactly-once for both layouts, also when a crash between
-    the write and the checkpoint's commit makes Spark replay a batch.
+    Both layouts date a batch by ``current_timestamp()``, which the
+    checkpoint's offset log fixes per batch. Delivery is exactly-once for
+    both, also when a crash between the write and the commit makes Spark
+    replay a batch.
 
     ``reader_registry``: per-topic READER schemas for rolling upgrades —
     payloads decode with the writer schema from ``registry`` under the
@@ -328,7 +336,10 @@ def ingest(
             )
         else:
             q = (
-                branch.writeStream.foreachBatch(
+                branch.select(
+                    "value", F.unix_millis(F.current_timestamp()).alias(_BATCH_TIME_COL)
+                )
+                .writeStream.foreachBatch(
                     _reference_layout_writer(sink_path, date_format, avsc, mode, reader)
                 )
                 .option("checkpointLocation", ckpt)
@@ -373,36 +384,33 @@ def _reference_layout_writer(
     mode: str = "FAILFAST",
     reader_avsc: str | None = None,
 ):
-    """foreachBatch sink reproducing ``<out>/<topic>/<SimpleDateFormat(now)>/``.
+    """foreachBatch sink reproducing ``<out>/<topic>/<SimpleDateFormat(batch time)>/``.
 
-    Takes the topic's RAW ``(topic, value)`` rows. Emptiness is tested on
-    those rows (a JVM-only ``limit 1``) and empty batches write nothing (K4
-    lazy-open); only a non-empty batch is Avro-decoded, with
-    :func:`decode_avro` under ``avsc``/``mode``/``reader_avsc``, once, as
-    part of its write.
+    Takes the topic's RAW ``value`` bytes plus ``_BATCH_TIME_COL``. One
+    JVM-only ``head()`` of that column reads the batch time; ``None`` means
+    an empty batch, which writes nothing (K4 lazy-open). Only a non-empty
+    batch's ``value`` is Avro-decoded, with :func:`decode_avro` under
+    ``avsc``/``mode``/``reader_avsc``, once, as part of its write.
 
-    The date string is formatted once per micro-batch on the driver by
-    the reference's own formatter, ``java.text.SimpleDateFormat`` (in
-    UTC), through the session's JVM — the exact analogue of the reference
-    freezing it at writer-open time (ETLTask.java:164-167).
+    The date string is the batch time formatted on the driver by the
+    reference's own formatter, ``java.text.SimpleDateFormat`` (in UTC),
+    through the session's JVM — the analogue of the reference freezing it
+    at writer-open time (ETLTask.java:164-167).
 
     Delivery (C1/C2) is exactly-once, crash-replay included. A restart
-    replays only the last uncommitted batch, with the same ``batch_id``
-    and rows, and every step below can be rerun:
+    replays only the last uncommitted batch, with the same ``batch_id``,
+    rows and batch time (the offset log's ``batchTimestampMs``), so the
+    same ``<date>``, and every step below can be rerun:
 
-    1. pin the batch's date in ``_batch_index/<batch_id>__<date, / as ~>``
-       before any data is written, so a replay lands in the SAME
-       directory, and delete the older markers, which no replay can need;
-    2. write the decoded rows into a cleared ``_staging/`` directory;
-    3. delete any ``<date>/part-b<batch_id>-*`` a failed attempt left,
+    1. write the decoded rows into a cleared ``_staging/`` directory;
+    2. delete any ``<date>/part-b<batch_id>-*`` a failed attempt left,
        rename each staged ``part-*`` to ``<date>/part-b<batch_id>-*``,
        and remove ``_staging/``.
 
-    Spark's readers skip ``_``-prefixed paths, so neither sidecar shows
-    in a read of ``<out>/<topic>``. The markers belong to one checkpoint:
-    reset the checkpoint and the sink directory together. All file
-    operations go through the Hadoop FS API, so any scheme (file://,
-    hdfs://, s3a://) works, not just the local fs.
+    Spark's readers skip ``_``-prefixed paths, so ``_staging/`` does not
+    show in a read of ``<out>/<topic>``. All file operations go through
+    the Hadoop FS API, so any scheme (file://, hdfs://, s3a://) works, not
+    just the local fs.
     """
     # (FileSystem, Path class, UTC formatter, Date class), resolved on the
     # first non-empty batch: each package segment costs a py4j call. The
@@ -410,7 +418,8 @@ def _reference_layout_writer(
     handles: list = []
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        first = batch_df.select(_BATCH_TIME_COL).head()
+        if first is None:
             return
         if not handles:
             fs, jvm = _fs(batch_df.sparkSession, sink_path)
@@ -418,25 +427,13 @@ def _reference_layout_writer(
             fmt.setTimeZone(jvm.java.util.TimeZone.getTimeZone("UTC"))
             handles.extend((fs, jvm.org.apache.hadoop.fs.Path, fmt, jvm.java.util.Date))
         fs, hadoop_path, fmt, java_date = handles
+        date_str = fmt.format(java_date(first[0]))
 
         def path(rel: str):
             return hadoop_path(f"{sink_path}/{rel}")
 
-        fs.mkdirs(path("_batch_index"))
-        pin = f"{batch_id}__"
-        markers = [st.getPath().getName() for st in fs.listStatus(path("_batch_index"))]
-        pinned = [m for m in markers if m.startswith(pin)]
-        if pinned:
-            date_str = pinned[0][len(pin):].replace("~", "/")
-        else:
-            date_str = fmt.format(java_date())
-            fs.create(path(f"_batch_index/{pin}{date_str.replace('/', '~')}"), True).close()
-        for m in markers:
-            if not m.startswith(pin):
-                fs.delete(path(f"_batch_index/{m}"), False)
-
         fs.delete(path("_staging"), True)
-        decode_avro(batch_df, avsc, mode=mode, reader_avsc=reader_avsc).write.mode(
+        decode_avro(batch_df.select("value"), avsc, mode=mode, reader_avsc=reader_avsc).write.mode(
             "append"
         ).option("compression", "snappy").parquet(f"{sink_path}/_staging")
 

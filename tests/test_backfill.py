@@ -15,7 +15,6 @@ import glob
 import json
 import time
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,12 +26,7 @@ from kafka_etl_consumer_spark.fixtures import (
     item_view_events,
 )
 from kafka_etl_consumer_spark.schema.registry import DictSchemaRegistry
-from kafka_etl_consumer_spark.streaming.ingest import (
-    IntervalUnit,
-    backfill_decoded,
-    land_raw,
-    rolling_trigger,
-)
+from kafka_etl_consumer_spark.streaming.ingest import backfill_decoded, land_raw
 
 ENVELOPE = T.StructType(
     [T.StructField("topic", T.StringType()), T.StructField("value", T.BinaryType())]
@@ -72,7 +66,6 @@ def _bronze_by_hand(spark, tmp_path, dts=("2026-08-01", "2026-08-02"), n_per=5):
     return raw_dir, events
 
 
-@pytest.mark.slow
 def test_land_raw_streams_bytes_unchanged(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     raw_dir = str(tmp_path / "raw")
@@ -85,7 +78,7 @@ def test_land_raw_streams_bytes_unchanged(spark, tmp_path):
         raw_dir,
         topics=[TOPIC],
         checkpoint_path=ckpt,
-        trigger=rolling_trigger(IntervalUnit.MINUTE, 1),
+        trigger="1 second",
     )
     try:
         deadline = time.time() + 60
@@ -323,7 +316,6 @@ def test_backfill_bronze_partitions_requires_event_time(spark, tmp_path):
         raise AssertionError("expected ValueError")
 
 
-@pytest.mark.slow
 def test_backfill_matches_ingest_event_time_layout(spark, tmp_path):
     # the ADVICE round-4 failure mode, closed end-to-end: a silver table
     # written by ingest(event_time_col=...) must be repairable by
@@ -346,6 +338,7 @@ def test_backfill_matches_ingest_event_time_layout(spark, tmp_path):
         out_dir,
         topics=[TOPIC],
         checkpoint_path=ckpt,
+        trigger="1 second",
         layout="hive",
         date_format="yyyy-MM-dd/HH",
         event_time_col=ev_col,

@@ -28,6 +28,7 @@ from kafka_etl_consumer_spark.fixtures import (
 )
 from kafka_etl_consumer_spark.schema.registry import DictSchemaRegistry
 from kafka_etl_consumer_spark.streaming.ingest import (
+    _BATCH_TIME_COL,
     _reference_layout_writer,
     decode_avro,
     encode_avro,
@@ -46,6 +47,13 @@ def _encoded_events_df(spark, n=10):
         for r in item_view_events(n)
     ]
     return spark.createDataFrame(rows, ENVELOPE)
+
+
+def _as_batch(df):
+    """``df`` as one reference-layout micro-batch: its ``value`` bytes plus
+    a fixed batch time (now), the column Spark fills from the offset log,
+    so calling the writer again with the same frame is a replay."""
+    return df.select("value", F.lit(int(time.time() * 1000)).alias(_BATCH_TIME_COL))
 
 
 # a landed file of the reference layout: <topic>/<yyyy-MM-dd/HH/mm>/part-*
@@ -72,6 +80,9 @@ def test_decode_avro_batch(spark):
     assert rows[0].price == 168000
     # nested struct preserved, not flattened (reference pass-through, §2.1)
     assert out.schema["baseProperties"].dataType.typeName() == "struct"
+    # a kept column the input lacks is Spark's KEY_NOT_EXISTS, at plan time
+    with pytest.raises(KeyError):
+        decode_avro(df, ITEM_VIEW_EVENT_AVSC, keep_cols=["missing"])
 
 
 def test_decode_avro_permissive_vs_failfast(spark):
@@ -372,13 +383,13 @@ def test_reader_schema_evolution(spark):
 def test_reference_layout_idempotent_replay(spark, tmp_path):
     """Chaos-replay parity (VERDICT r1 item 6): after a crash mid-batch,
     Structured Streaming re-invokes foreachBatch with the SAME batch_id.
-    The replay must land in the date directory pinned by the
-    _batch_index marker and replace the batch's own ``part-b<id>-*``
-    files: a partial file and a staging directory left by the failed
-    attempt disappear and the row set equals the batch exactly once."""
+    The replay carries the same batch time, so it must land in the same
+    date directory and replace the batch's own ``part-b<id>-*`` files: a
+    partial file and a staging directory left by the failed attempt
+    disappear and the row set equals the batch exactly once."""
     sink = str(tmp_path / "sink")
     writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
-    batch = _encoded_events_df(spark, 5)
+    batch = _as_batch(_encoded_events_df(spark, 5))
 
     writer(batch, 0)
     files_first = _landed(sink)
@@ -394,8 +405,9 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
 
     back = spark.read.option("recursiveFileLookup", "true").parquet(sink)
     assert back.count() == 5  # exactly once, not 10, and no stray partials
-    # the writer decoded the raw (topic, value) rows on their way out
-    assert "value" not in back.columns
+    # the writer decoded the raw value bytes on their way out, and the
+    # batch time stayed out of the landed schema
+    assert "value" not in back.columns and _BATCH_TIME_COL not in back.columns
     assert sorted(r.itemId for r in back.select("itemId").collect()) == [
         e["itemId"] for e in item_view_events(5)
     ]
@@ -411,17 +423,16 @@ def test_reference_layout_idempotent_replay(spark, tmp_path):
 
 
 def test_reference_layout_keeps_one_batch_marker(spark, tmp_path):
-    """Only the last batch can be replayed, so after three batches
-    ``_batch_index/`` holds the last batch's marker alone, and no
+    """The batch time comes from Spark's offset log, so after three
+    batches the sink holds no ``_batch_index/`` marker directory, and no
     ``.parquet`` file is left outside ``<date>/``."""
     sink = str(tmp_path / "sink")
     writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
-    batch = _encoded_events_df(spark, 3)
+    batch = _as_batch(_encoded_events_df(spark, 3))
     for batch_id in range(3):
         writer(batch, batch_id)
 
-    markers = [m for m in os.listdir(f"{sink}/_batch_index") if not m.startswith(".")]
-    assert len(markers) == 1 and markers[0].startswith("2__"), markers
+    assert not os.path.exists(f"{sink}/_batch_index")
     landed = _landed(sink)
     assert landed and all(LANDED_RE.match(f) for f in landed), landed
     assert {os.path.basename(f)[: len("part-b0-")] for f in landed} == {
@@ -434,9 +445,9 @@ def test_reference_layout_keeps_one_batch_marker(spark, tmp_path):
 @pytest.mark.parametrize("replay", [False, True])
 def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatch, replay):
     """K4: a micro-batch with no rows for the topic opens no directory and
-    never builds the decode — emptiness is tested on the raw rows. A
-    replay of the empty batch (same ``batch_id``) writes nothing either,
-    not even a ``_batch_index`` marker."""
+    never builds the decode — emptiness is a one-row read of the batch
+    time. A replay of the empty batch (same ``batch_id``) writes nothing
+    either."""
     import sys
 
     ing = sys.modules["kafka_etl_consumer_spark.streaming.ingest"]
@@ -444,7 +455,7 @@ def test_reference_layout_empty_batch_writes_nothing(spark, tmp_path, monkeypatc
     monkeypatch.setattr(ing, "decode_avro", lambda *a, **k: calls.append(a))
     sink = str(tmp_path / "sink")
     writer = ing._reference_layout_writer(sink, "yyyy-MM-dd/HH/mm", ITEM_VIEW_EVENT_AVSC)
-    raw = _encoded_events_df(spark, 3).filter(F.col("topic") == "other-topic")
+    raw = _as_batch(_encoded_events_df(spark, 3).filter(F.col("topic") == "other-topic"))
 
     writer(raw, 0)
     if replay:
@@ -457,12 +468,14 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
     """The writer decodes under the query's mode: FAILFAST fails the batch
     (the reference's crash, AbstractAvroDeserializeService.java:56-59),
     PERMISSIVE lands the corrupt payload as an all-null row."""
-    raw = spark.createDataFrame(
-        [
-            Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(b"\x07broken")),
-            *_encoded_events_df(spark, 2).collect(),
-        ],
-        ENVELOPE,
+    raw = _as_batch(
+        spark.createDataFrame(
+            [
+                Row(topic=ITEM_VIEW_EVENT_TOPIC, value=bytearray(b"\x07broken")),
+                *_encoded_events_df(spark, 2).collect(),
+            ],
+            ENVELOPE,
+        )
     )
     fmt = "yyyy-MM-dd/HH/mm"
     with pytest.raises(Exception):
@@ -482,15 +495,15 @@ def test_reference_layout_writer_corrupt_payload(spark, tmp_path):
 def test_reference_layout_date_format_every_letter(spark, tmp_path, replay):
     """The batch directory is the reference's SimpleDateFormat of the batch
     time in UTC: every pattern letter is formatted (``ss`` included), none
-    lands as literal text. A replay of the batch (same ``batch_id``, a
-    second or more later) reuses the pinned directory and lands the rows
-    once."""
+    lands as literal text. A replay of the batch (same ``batch_id`` and
+    batch time, a second or more later) lands in the same directory and
+    lands the rows once."""
     import datetime as dt
 
     sink = str(tmp_path / "sink")
     writer = _reference_layout_writer(sink, "yyyy-MM-dd/HH/mm/ss", ITEM_VIEW_EVENT_AVSC)
-    batch = _encoded_events_df(spark, 2)
     before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None, microsecond=0)
+    batch = _as_batch(_encoded_events_df(spark, 2))
     writer(batch, 0)
     after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     if replay:
@@ -543,7 +556,7 @@ def test_decode_avro_reader_equal_to_writer_multibranch_union(spark):
 def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
     """End-to-end reference layout across a stop/restart: no duplicates,
     every file directly under its date directory, no staging directory
-    left, and one batch marker."""
+    left, and no ``_batch_index/`` marker directory."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
 
@@ -584,7 +597,7 @@ def test_ingest_idempotent_restart_no_duplicates(spark, tmp_path):
     sink = f"{out}/{ITEM_VIEW_EVENT_TOPIC}"
     assert all(LANDED_RE.match(f) for f in _landed(sink)), _landed(sink)
     assert not os.path.exists(f"{sink}/_staging")
-    assert len([m for m in os.listdir(f"{sink}/_batch_index") if not m.startswith(".")]) == 1
+    assert not os.path.exists(f"{sink}/_batch_index")
 
 
 @pytest.mark.parametrize("layout", ["hive", "reference"])
@@ -594,10 +607,13 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path, layout):
     reference). Simulated by deleting the newest ``commits/`` marker after a
     clean run; on restart Spark re-executes that batch. The hive layout's
     file sink logs committed files in ``_spark_metadata``; the reference
-    layout's replay lands in the pinned date directory and replaces its own
-    ``part-b<id>-*`` files. Either way the replay is invisible-or-idempotent
-    and the read-back row set still equals a BATCH decode of the same
-    source — the oracle the streaming path must match."""
+    layout's replay replaces its own ``part-b<id>-*`` files. Either way the
+    replay is invisible-or-idempotent and the read-back row set still
+    equals a BATCH decode of the same source — the oracle the streaming
+    path must match. The directories are formatted down to the second and
+    the restart comes more than a second later, so a reference-layout
+    replay that formatted the wall clock instead of the batch time from
+    the offset log would land in a second directory."""
     schema = parse_schema(ITEM_VIEW_EVENT_AVSC)
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
 
@@ -616,6 +632,7 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path, layout):
             topics=[ITEM_VIEW_EVENT_TOPIC],
             checkpoint_path=ckpt,
             trigger="1 second",
+            date_format="yyyy-MM-dd/HH/mm/ss",
             layout=layout,
         )
         try:
@@ -649,13 +666,26 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path, layout):
     if os.path.exists(crc):
         os.remove(crc)
 
+    sink = f"{out}/{ITEM_VIEW_EVENT_TOPIC}"
+
+    def replayed_dirs():
+        return {
+            os.path.dirname(f)
+            for f in glob.glob(f"{sink}/**/part-b{batch}-*.parquet", recursive=True)
+        }
+
+    first_dirs = replayed_dirs()
+    time.sleep(1.1)  # a wall-clock ``ss`` would now differ
     stage(all_events[6:])
     run_once()
+    if layout == "reference":
+        # the replay landed where its first attempt did
+        assert first_dirs and replayed_dirs() == first_dirs, (first_dirs, replayed_dirs())
 
     reader = spark.read
     if layout == "reference":  # plain date dirs, not key=value partitions
         reader = reader.option("recursiveFileLookup", "true")
-    back = reader.parquet(f"{out}/{ITEM_VIEW_EVENT_TOPIC}")
+    back = reader.parquet(sink)
     oracle = decode_avro(
         spark.read.parquet(src).filter(F.col("topic") == ITEM_VIEW_EVENT_TOPIC),
         ITEM_VIEW_EVENT_AVSC,
