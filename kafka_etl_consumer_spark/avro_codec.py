@@ -6,7 +6,7 @@ AbstractAvroDeserializeService.java:46-60 in the reference). Spark's own
 ``from_avro`` lives in the external ``spark-avro`` jar, which is not part of
 a stock PySpark install; this module provides the same semantics with zero
 JVM dependencies. ``decode_avro`` (streaming/ingest.py) always decodes with
-this codec, through an Arrow-batched ``mapInPandas``.
+this codec, through ``mapInArrow``.
 
 Decoding has one entry point, :func:`decode_record` (:func:`decoder` gives
 the same per-value function over a :class:`Reader`, for framed streams such
@@ -72,13 +72,16 @@ class _Logical(NamedTuple):
 
 
 def _instant(unit: dt.timedelta, spark: T.DataType) -> _Logical:
-    """A count of ``unit`` since the epoch. Python values are tz-naive UTC
-    (the session tz this repo pins)."""
+    """A count of ``unit`` since the epoch. Decoded values are tz-naive UTC
+    (the session tz this repo pins); encode also takes an aware datetime,
+    as Arrow hands a Spark timestamp over in the session tz."""
     return _Logical(
         lambda node: spark,
         lambda node: lambda v: _EPOCH_DT + unit * v,
         lambda node, v: (
-            (v.replace(tzinfo=None) - _EPOCH_DT) // unit if isinstance(v, dt.datetime) else int(v)
+            (v.replace(tzinfo=None) - (v.utcoffset() or dt.timedelta()) - _EPOCH_DT) // unit
+            if isinstance(v, dt.datetime)
+            else int(v)
         ),
     )
 
@@ -752,10 +755,10 @@ def _encode(schema: Any, v: Any, w: _Writer) -> None:
             for item in v:
                 _encode(schema["items"], item, w)
         w.write_long(0)
-    elif t == "map":
+    elif t == "map":  # a dict, or Arrow's [(key, value), ...] pairs
         if v:
             w.write_long(len(v))
-            for k, val in v.items():
+            for k, val in v.items() if isinstance(v, dict) else v:
                 w.write_bytes(str(k).encode("utf-8"))
                 _encode(schema["values"], val, w)
         w.write_long(0)

@@ -26,9 +26,11 @@ import json
 import os
 import uuid
 import zlib
-from typing import Any, Iterable, Iterator
+from typing import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kafka_etl_consumer_spark.avro_codec import (
     Reader,
@@ -116,48 +118,38 @@ def scan_avro_py(spark: SparkSession, path: str, avsc: str | dict) -> DataFrame:
     """Read `.avro` OCF files as a DataFrame without spark-avro.
 
     ``binaryFile`` source → per-partition pure-Python block decode via
-    Arrow ``mapInPandas``. The explicit ``avsc`` (reader's schema) defines
+    ``mapInArrow``. The explicit ``avsc`` (reader's schema) defines
     the output columns — same explicit-schema policy as scan_csv/scan_json;
     files whose writer schema differs structurally fail loudly rather than
     silently coercing."""
-    import pandas as pd
-
     struct = to_spark_struct(avsc)
-    names = [f.name for f in struct.fields]
+    arrow_schema = to_arrow_schema(struct)
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for content in pdf["content"]:
-                _, records = read_ocf(bytes(content))
-                rows.extend(records)
-            yield pd.DataFrame(
-                {n: [r[n] for r in rows] for n in names}
-                if rows
-                else {n: [] for n in names}
-            )
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [r for blob in batch.column("content").to_pylist() for r in read_ocf(blob)[1]]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     src = spark.read.format("binaryFile").load(f"{path}/*.avro" if os.path.isdir(path) else path)
-    return src.select("content").mapInPandas(decode, struct)
+    return src.select("content").mapInArrow(decode, struct)
 
 
 def write_avro_py(
     df: DataFrame, path: str, avsc: str | dict, codec: str = "deflate"
 ) -> int:
-    """Write a DataFrame as OCF `.avro` files, one file per partition
-    (executor-local writes — local/NFS-style filesystems; use spark-avro
-    for HDFS/S3). Returns the number of files written."""
+    """Write a DataFrame as OCF `.avro` files, one file per non-empty
+    partition (executor-local writes — local/NFS-style filesystems; use
+    spark-avro for HDFS/S3). Rows cross into Python through
+    ``mapInArrow``, so a timestamp keeps its instant whatever the
+    worker's local time zone. Returns the number of files written."""
     os.makedirs(path, exist_ok=True)
     avsc_json = json.dumps(avsc) if isinstance(avsc, dict) else avsc
 
-    def write_partition(rows: Iterator[Any]) -> Iterator[int]:
-        records = [row.asDict(recursive=True) for row in rows]
-        if not records:
-            return iter(())
-        blob = write_ocf(avsc_json, records, codec=codec)
-        fname = os.path.join(path, f"part-{uuid.uuid4().hex}.avro")
-        with open(fname, "wb") as f:
-            f.write(blob)
-        return iter((1,))
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        records = [r for batch in batches for r in batch.to_pylist()]
+        if records:
+            with open(os.path.join(path, f"part-{uuid.uuid4().hex}.avro"), "wb") as f:
+                f.write(write_ocf(avsc_json, records, codec=codec))
+            yield pa.RecordBatch.from_pydict({"files": [1]})
 
-    return df.rdd.mapPartitions(write_partition).sum()
+    return df.mapInArrow(write_partition, "files long").count()

@@ -61,6 +61,18 @@ def _jpath(jvm, path: str):
     return jvm.org.apache.hadoop.fs.Path(path)
 
 
+def _swap_dir(fs, jvm, path: str, new: str, backup: str) -> None:
+    """Replace directory ``path`` by ``new``, parking the old one at
+    ``backup`` until the swap is done. A failed rename raises; when ``new``
+    cannot take ``path``'s place, the old directory is moved back first."""
+    if not fs.rename(_jpath(jvm, path), _jpath(jvm, backup)):
+        raise OSError(f"could not move {path} to {backup}")
+    if not fs.rename(_jpath(jvm, new), _jpath(jvm, path)):
+        fs.rename(_jpath(jvm, backup), _jpath(jvm, path))
+        raise OSError(f"could not move {new} to {path}; {path} is unchanged")
+    fs.delete(_jpath(jvm, backup), True)
+
+
 def _norm(p: str) -> str:
     """Normalize a path/URI for set comparison: local-FS spellings
     (``file:///x``, ``file:/x``, ``/x``) all collapse to ``/x``; other
@@ -161,10 +173,7 @@ def compact_parquet(
         .option("compression", compression)
         .parquet(tmp)
     )
-    backup = f"{path}__precompact"
-    fs.rename(_jpath(jvm, path), _jpath(jvm, backup))
-    fs.rename(_jpath(jvm, tmp), _jpath(jvm, path))
-    fs.delete(_jpath(jvm, backup), True)
+    _swap_dir(fs, jvm, path, tmp, f"{path}__precompact")
     return sum(
         1
         for p, _, _ in _list_files(fs, jvm, path)
@@ -464,10 +473,7 @@ def forget_keys(
         cleaned = df.join(keys, key_col, "left_anti")
         tmp = f"{table_path}__forgetting"
         cleaned.write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-        backup = f"{table_path}__preforget"
-        fs.rename(_jpath(jvm, table_path), _jpath(jvm, backup))
-        fs.rename(_jpath(jvm, tmp), _jpath(jvm, table_path))
-        fs.delete(_jpath(jvm, backup), True)
+        _swap_dir(fs, jvm, table_path, tmp, f"{table_path}__preforget")
         rewritten = -1
 
     # an erasure that matched EVERY row of EVERY partition leaves no

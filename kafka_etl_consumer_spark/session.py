@@ -49,12 +49,8 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     target = min_partitions or session.sparkContext.defaultParallelism
     if target <= 1:
         return df  # any non-empty input already yields >= 1 partition
-    raw = str(session.conf.get("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)))
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    low = raw.strip().lower().removesuffix("b")
-    max_pb = (
-        int(low[:-1]) * units[low[-1]] if low and low[-1] in units else int(low or 0)
-    )
+    # Spark's own parse of spark.sql.files.maxPartitionBytes (any byte unit)
+    max_pb = session._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     stat = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     size = int(stat.toString()) if hasattr(stat, "toString") else int(stat)
     if size < target * max_pb:

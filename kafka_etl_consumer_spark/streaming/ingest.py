@@ -5,7 +5,7 @@ Reference semantics being reproduced (SURVEY.md §2.1):
          (ETLTask.java:236,261-274)        → one streaming source, one
          filtered branch per topic
 - S3     per-topic binary-Avro decode (AbstractAvroDeserializeService.java:46-60)
-         → the pure-Python codec through Arrow-batched ``mapInPandas``.
+         → the pure-Python codec through ``mapInArrow``.
          Like the reference, each message is decoded once, on its way to
          the writer:
          inside the ``foreachBatch`` writer for ``layout='reference'``
@@ -39,10 +39,11 @@ from __future__ import annotations
 import enum
 from typing import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.storagelevel import StorageLevel
 
@@ -149,15 +150,14 @@ def decode_avro(
     symbols fall back to the reader's enum ``default``. Output
     columns and types come from the reader schema.
 
-    Decodes with the pure-Python codec in Arrow-batched ``mapInPandas``,
-    partition-parallel.
+    Decodes with the pure-Python codec in ``mapInArrow``, partition-parallel:
+    pyarrow builds the output columns from the decoded records.
     """
     permissive = _permissive(mode, corrupt_col)
     keep = list(keep_cols)
     struct_schema = to_spark_struct(reader_avsc if reader_avsc is not None else avsc)
     writer_tree = parse_schema(avsc)
     reader_tree = None if reader_avsc is None else parse_schema(reader_avsc)
-    field_names = [f.name for f in struct_schema.fields]
     if permissive:
         # a corrupt payload becomes an all-null record → every field
         # (including non-null Avro fields) must admit null in the output
@@ -169,28 +169,29 @@ def decode_avro(
         + ([T.StructField(corrupt_col, T.BinaryType())] if corrupt_col else [])
         + list(struct_schema.fields)
     )
+    record_type = pa.struct(list(to_arrow_schema(struct_schema)))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             records, bad = [], []
-            for payload in pdf[value_col]:
+            for payload in batch.column(value_col).to_pylist():
                 try:
-                    records.append(decode_record(writer_tree, bytes(payload), reader_tree))
+                    records.append(decode_record(writer_tree, payload, reader_tree))
                     bad.append(None)
                 except Exception:
                     if not permissive:
                         raise
-                    records.append(dict.fromkeys(field_names))
-                    bad.append(bytes(payload))
-            out = pd.DataFrame({c: pdf[c].values for c in keep})
+                    records.append(None)  # an all-null record
+                    bad.append(payload)
+            # from a struct array, so a zero-field record keeps its row count
+            out = pa.RecordBatch.from_struct_array(pa.array(records, record_type))
             if corrupt_col:
-                out[corrupt_col] = bad
-            for name in field_names:
-                out[name] = [r[name] for r in records]
-            yield out if len(out.columns) else pd.DataFrame(index=pdf.index)
+                out = out.add_column(0, corrupt_col, pa.array(bad, pa.binary()))
+            for c in reversed(keep):  # kept columns pass through as Spark sent them
+                out = out.add_column(0, batch.schema.field(c), batch.column(c))
+            yield out
 
-    return df.mapInPandas(decode_batches, out_schema)
-
+    return df.mapInArrow(decode_batches, out_schema)
 
 
 def encode_avro(df: DataFrame, avsc: str, value_col: str = "value") -> DataFrame:
@@ -200,27 +201,13 @@ def encode_avro(df: DataFrame, avsc: str, value_col: str = "value") -> DataFrame
     KafkaAvroEventSerializer.java:30-49) — used by tests and by a
     Kafka-sink path (``to_avro`` parity)."""
     schema_tree = parse_schema(avsc)
-    cols = df.columns
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = pdf.to_dict("records")
-            yield pd.DataFrame(
-                {value_col: [encode_record(schema_tree, _plain(r)) for r in rows]}
-            )
+    def encode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            values = [encode_record(schema_tree, r) for r in batch.to_pylist()]
+            yield pa.RecordBatch.from_arrays([pa.array(values, pa.binary())], [value_col])
 
-    def _plain(v):
-        if isinstance(v, dict):
-            return {k: _plain(x) for k, x in v.items()}
-        if hasattr(v, "asDict"):
-            return _plain(v.asDict(recursive=True))
-        if isinstance(v, (list, tuple)):
-            return [_plain(x) for x in v]
-        if pd.api.types.is_scalar(v) and pd.isna(v):
-            return None
-        return v
-
-    return df.mapInPandas(encode_batches, T.StructType([T.StructField(value_col, T.BinaryType())]))
+    return df.mapInArrow(encode_batches, T.StructType([T.StructField(value_col, T.BinaryType())]))
 
 
 # ---------------------------------------------------------------------------
@@ -630,7 +617,7 @@ def backfill_decoded(
     Scale shape (100 TB): the bronze scan partition-prunes to the named
     ``dt0`` values (plan-asserted in tests/test_backfill.py); decode is
     the path streaming uses (the pure-Python codec through
-    ``mapInPandas``), a narrow map, and runs ONCE
+    ``mapInArrow``), a narrow map, and runs ONCE
     (the decoded frame is persisted across the count and the write); the
     write touches only the affected partition directories — untouched
     silver partitions are never read or rewritten, so a one-hour backfill

@@ -46,25 +46,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    aggs: list[Column],
-    group_cols: list[str] | None = None,
-    watermark: str | None = "10 minutes",
-) -> DataFrame:
-    d = with_event_time(df, ts_col, watermark)
-    return (
-        d.groupBy(*(group_cols or []), F.window(ts_col, duration, slide).alias("w"))
-        .agg(*aggs)
-        .withColumn("window_start", F.col("w.start"))
-        .withColumn("window_end", F.col("w.end"))
-        .drop("w")
-    )
-
-
 def session_agg(
     df: DataFrame,
     ts_col: str,

@@ -3,6 +3,8 @@ bytes-level, DataFrame-level, and the scan_avro fallback path."""
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
 import json
 
 import pytest
@@ -84,3 +86,18 @@ def test_write_avro_py_map_of_union(spark, tmp_path):
     assert write_avro_py(decoded.coalesce(1), out, avsc) == 1
     back = [r.asDict(recursive=True) for r in scan_avro_py(spark, out, avsc).collect()]
     assert sorted(back, key=lambda r: len(r["m"])) == sorted(rows, key=lambda r: len(r["m"]))
+
+
+def test_write_avro_py_timestamp_ignores_worker_time_zone(spark, tmp_path, monkeypatch):
+    # the session time zone is UTC; a Python worker in another zone must
+    # still write the instant, not its own wall-clock reading of it
+    monkeypatch.setitem(spark.sparkContext.environment, "TZ", "Asia/Seoul")
+    avsc = {"type": "record", "name": "T", "fields": [
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}}]}
+    df = spark.sql("SELECT timestamp'2024-01-01 00:00:00' AS ts")
+    out = str(tmp_path / "ts_avro")
+    assert write_avro_py(df, out, avsc) == 1
+    [path] = glob.glob(f"{out}/*.avro")
+    with open(path, "rb") as f:
+        _, records = read_ocf(f.read())
+    assert records == [{"ts": dt.datetime(2024, 1, 1)}]

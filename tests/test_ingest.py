@@ -10,6 +10,7 @@ decode→partition→write path runs exactly as it would off Kafka.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 import shutil
@@ -83,6 +84,15 @@ def test_decode_avro_batch(spark):
     # a kept column the input lacks is Spark's KEY_NOT_EXISTS, at plan time
     with pytest.raises(KeyError):
         decode_avro(df, ITEM_VIEW_EVENT_AVSC, keep_cols=["missing"])
+
+
+def test_decode_avro_zero_field_record_keeps_row_count(spark):
+    # a record with no fields decodes to rows with no columns; each payload
+    # is still one row (the empty payload is its whole encoding)
+    df = spark.createDataFrame([(bytearray(b""),)] * 3, "value binary")
+    out = decode_avro(df, '{"type": "record", "name": "E", "fields": []}')
+    assert out.columns == []
+    assert out.count() == 3
 
 
 def test_decode_avro_permissive_vs_failfast(spark):
@@ -696,7 +706,7 @@ def test_chaos_lost_commit_replay_exactly_once(spark, tmp_path, layout):
 
 
 def test_decode_avro_logical_types_and_union_struct(spark):
-    # Logical types land as real Spark types through the full mapInPandas
+    # Logical types land as real Spark types through the full mapInArrow
     # decode path (date/timestamp/decimal), and a multi-branch union lands
     # as the spark-avro member-struct — not just in the codec unit tests.
     import datetime as dt
@@ -740,6 +750,26 @@ def test_decode_avro_logical_types_and_union_struct(spark):
     assert got[2].amount == decimal.Decimal("-0.01")
     assert got[2].ref.member1 == 42
     assert got[3].day == dt.date(2030, 12, 31) and got[3].ref is None
+
+
+def test_decode_encode_timestamp_keeps_its_instant_in_any_session_time_zone(spark):
+    # a timestamp crosses Arrow as an instant both ways: under a non-UTC
+    # session time zone it reads as the same epoch offset and encodes
+    # back to the same bytes
+    avsc = json.dumps({"type": "record", "name": "T", "fields": [
+        {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}}]})
+    payload = encode_record(parse_schema(avsc), {"at": 1_700_000_000_123})
+    df = spark.createDataFrame([(bytearray(payload),)], "value binary")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Seoul")
+    try:
+        decoded = decode_avro(df, avsc)
+        [row] = decoded.select(F.unix_millis("at").alias("ms")).collect()
+        [back] = encode_avro(decoded, avsc).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert row.ms == 1_700_000_000_123
+    assert bytes(back.value) == payload
 
 
 def test_registry_framing_roundtrip_and_decode(spark):

@@ -34,6 +34,42 @@ def test_compact_parquet(spark, sf_dir, tmp_path):
     assert not glob.glob(f"{out}__*")  # no temp/backup dirs left behind
 
 
+@pytest.mark.parametrize("op", ["compact_parquet", "forget_keys"])
+def test_failed_directory_swap_keeps_the_table(spark, tmp_path, monkeypatch, op):
+    from kafka_etl_consumer_spark import maintenance
+
+    real_fs = maintenance._fs
+
+    class SecondRenameFails:
+        """The table's FileSystem, except that its second rename (the new
+        directory into the table's place) fails as Hadoop reports it."""
+
+        def __init__(self, fs):
+            self._fs, self._renames = fs, 0
+
+        def rename(self, src, dst):
+            self._renames += 1
+            return self._renames != 2 and self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def fake_fs(spark, path):
+        fs, jvm = real_fs(spark, path)
+        return SecondRenameFails(fs), jvm
+
+    path = str(tmp_path / "table")
+    spark.range(10).withColumnRenamed("id", "k").repartition(4).write.parquet(path)
+    monkeypatch.setattr(maintenance, "_fs", fake_fs)
+    with pytest.raises(OSError, match="unchanged"):
+        if op == "compact_parquet":
+            maintenance.compact_parquet(spark, path)
+        else:
+            keys = spark.range(3).withColumnRenamed("id", "k")
+            maintenance.forget_keys(spark, path, "k", keys)
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(range(10))
+
+
 def test_audio_features_match_numpy(spark, sf_dir):
     docs = attach_binary(
         spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20), media_type="audio"
